@@ -16,35 +16,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_tj_project_spark.reuse import expr_once
+
 
 def _col(c: Column | str) -> Column:
     return c if isinstance(c, Column) else F.col(c)
-
-
-# Per-process memo of CONSTRUCTED Column expression trees, keyed by the
-# scalar parameters that fully determine them (column NAMES + shape
-# constants — never data). Column objects are immutable ASTs, so
-# reusing one across queries is exactly what hand-hoisting the
-# expression to a module constant would do; the memo just does it for
-# parameterized builders. Motivation (r18, guide §1): building a query
-# DataFrame costs 0.2–1.0 s of py4j round trips on this host — for the
-# LSH/minhash/ANN entries that is 30–50% of the whole benched
-# wall-clock, paid again on every rebuild of the same query. This
-# memoizes plan fragments only (the JVM memoizes the generated code
-# for them anyway); results are computed from the inputs every run.
-_EXPR_MEMO: dict = {}
-
-
-def expr_once(key: tuple, build):
-    """Return the memoized Column for ``key``, building it on miss.
-
-    ``key`` must uniquely determine the expression: include every
-    column name and shape constant the builder closes over."""
-    col = _EXPR_MEMO.get(key)
-    if col is None:
-        col = build()
-        _EXPR_MEMO[key] = col
-    return col
 
 
 def _as_double(c: Column) -> Column:
@@ -71,8 +47,8 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; NULL when either vector has zero norm.
 
     When both inputs are column NAMES the constructed expression is
-    memoized (see expr_once) — it costs ~45 py4j round trips to build
-    and is identical for every (a, b) pair of names."""
+    memoized (see reuse.expr_once) — it costs ~45 py4j round trips to
+    build and is identical for every (a, b) pair of names."""
     if isinstance(a, str) and isinstance(b, str):
         return expr_once(
             ("cosine", a, b), lambda: _cosine_col(F.col(a), F.col(b))

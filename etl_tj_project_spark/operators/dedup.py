@@ -32,39 +32,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_tj_project_spark import reuse
 from etl_tj_project_spark.functions.text import (
     char_shingles,
     doc_fingerprint,
     tokens,
     word_shingles,
 )
-from etl_tj_project_spark.functions.vectors import cosine_similarity, expr_once
+from etl_tj_project_spark.functions.vectors import cosine_similarity
 
 
-def _persist_once(df: DataFrame) -> DataFrame:
-    """persist() unless the CacheManager already holds this plan.
-
-    ``df.storageLevel`` does a CacheManager lookup by logical plan, so a
-    SECOND DataFrame object with the same plan (e.g. bench.py's
-    best-of-2 repeat of a query builder) reports the cached level and we
-    skip the redundant persist — which would otherwise log
-    "Asked to cache already cached data" and do nothing useful.
-    (``df.is_cached`` only reflects persist() called on THIS object.)
-
-    Accretion bound (ADVICE r14): operators deliberately do NOT
-    unpersist these frames — a composed downstream plan (e.g.
-    canonicalize -> containment) may still read them lazily after the
-    operator returns, which is exactly the lifetime bug the r13 CC
-    temp-dir fix was about. Each cached frame is id/pair-table-sized
-    (KB-MB at test scale, << corpus), the default MEMORY_AND_DISK level
-    is LRU-evicted under pressure, so a long session's cache footprint
-    is bounded by executor storage memory, never OOM. Long-running
-    multi-entry sessions (the full replay, bench cohorts) additionally
-    call ``spark.catalog.clearCache()`` at cohort boundaries."""
-    lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        df = df.persist()
-    return df
+# Reuse goes through these module attributes (callers elsewhere use
+# dedup._persist_once / _count_once too) so one swap instruments every
+# call; the policy itself lives in reuse.py.
+_persist_once = reuse.persist_once
+_count_once = reuse.count_once
+_COUNT_MEMO = reuse._COUNTS
 
 
 # --------------------------------------------------------------------------
@@ -165,10 +148,10 @@ def minhash_signature_df(
     """(id, mh0..mhk-1) minhash signatures: 2 md5s per shingle for 8
     hashes (slice scheme), fully parallel, no explode."""
     # The projection columns depend only on (text_col, num_hashes,
-    # shingle_k) — memoized expression trees (functions.vectors
-    # .expr_once, r18): the ~100 py4j calls that build them were a
-    # measurable slice of every LSH entry's wall-clock.
-    md5_cols, mins = expr_once(
+    # shingle_k) — memoized expression trees (reuse.expr_once):
+    # the ~100 py4j calls that build them were a measurable slice of
+    # every LSH entry's wall-clock.
+    md5_cols, mins = reuse.expr_once(
         ("mh_sig_cols", text_col, num_hashes, shingle_k),
         lambda: _md5_slice_mins(
             char_shingles(text_col, k=shingle_k), num_hashes
@@ -211,7 +194,7 @@ def minhash_bands(
             )
         return cols
 
-    band_cols = expr_once(("mh_band_cols", num_hashes, bands), _band_cols)
+    band_cols = reuse.expr_once(("mh_band_cols", num_hashes, bands), _band_cols)
     return sig.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("bh")
     ).select(id_col, F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
@@ -1373,32 +1356,6 @@ def _cc_star_loop(sym: DataFrame, n_sym: int, max_iter: int) -> DataFrame:
 _VERIFY_BITSET_MAX_TERMS = 4096
 _VERIFY_DICT_MAX_TERMS = 1 << 22
 
-# Per-PROCESS memo of the tier-dispatch vocabulary counts — the scalar
-# twin of _persist_once's CacheManager reuse (the r16-approved
-# within-run contract): a repeated build of the same query in one
-# session (bench best-of-2, replay) pays the count job once. Never
-# persisted, never cross-process; the parquet inputs are immutable for
-# the life of a session (the same assumption every _persist_once cache
-# already makes). Lookup uses LogicalPlan.sameResult — EXACTLY the
-# CacheManager's matching rule — because a string/hash key is not safe:
-# two LocalRelations with the same schema but different rows
-# canonicalize to the same string, and a stale count would size the
-# bitset wrong (caught by tests/test_verify_tiers.py in-suite).
-_COUNT_MEMO: list = []  # [(JVM analyzed plan, count)]
-
-
-def _count_once(df: DataFrame) -> int:
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        for p, n in _COUNT_MEMO:
-            if p.sameResult(plan):
-                return n
-    except Exception:
-        return df.count()
-    n = df.count()
-    _COUNT_MEMO.append((plan, n))
-    return n
-
 
 def _term_dictionary(dfreq: DataFrame) -> DataFrame:
     """(__term, __tid, __df): dense 1-based ids in rarest-first
@@ -1517,6 +1474,12 @@ def prefix_filter_jaccard_pairs(
     exact verification. The df ordering is corpus-global state,
     recomputed per snapshot (like the adaptive stopword list) — no
     driver-side materialization anywhere.
+
+    Construction is eager in one place: building the DataFrame fires
+    one count job, the vocabulary size that picks the verify tier.
+    reuse.count_once serves that count again only within one
+    SparkContext, so rewriting the input path mid-session is
+    unsupported.
     """
     # _ensure_parallelism (r17 optimization, guide §2.5 input skew): a
     # single-file corpus scans as ONE split, so the tokenize+explode
@@ -1702,7 +1665,13 @@ def _containment_candidate_stages(
     (which tier the postings are in). Split out so the guardrail strain
     (strain.py) can count the candidate-join input the verify stage
     would have to pay for, without duplicating the pipeline or running
-    the verify."""
+    the verify.
+
+    Construction is eager in one place: building the stages fires one
+    count job, the shingle-vocabulary size that picks the tier.
+    reuse.count_once serves that count again only within one
+    SparkContext, so rewriting the input path mid-session is
+    unsupported."""
     sh = F.array_distinct(
         F.when(
             F.trim(F.col(text_col)) == "", F.array().cast("array<string>")

@@ -23,8 +23,9 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_tj_project_spark.functions.vectors import cosine_similarity, expr_once
+from etl_tj_project_spark.functions.vectors import cosine_similarity
 from etl_tj_project_spark.operators.dedup import _ensure_parallelism
+from etl_tj_project_spark.reuse import expr_once
 
 
 def brute_force_topk(
@@ -92,9 +93,9 @@ def lsh_bucket(vec_col: Column | str, planes: list[list[float]]) -> Column:
     One transform lambda over the 2-D plane literal (see
     :func:`_planes_col`); bit p contributes ``1 << p`` exactly as the
     unrolled form did, summed in ascending-p order. For a column NAME
-    the constructed tree is memoized (functions.vectors.expr_once,
-    r18) — it is identical for every (name, planes) pair and costs
-    ~50 py4j round trips to build."""
+    the constructed tree is memoized (reuse.expr_once) — it is identical
+    for every (name, planes) pair and costs ~50 py4j round trips to
+    build."""
     if isinstance(vec_col, str):
         key = (
             "lsh_bucket",

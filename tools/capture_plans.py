@@ -1,9 +1,10 @@
-"""Capture .explain("formatted") for headline queries -> plans/r18/.
+"""Capture .explain("formatted") for headline queries -> plans/<round>/.
 
 Usage:
-    python tools/capture_plans_r18.py <suffix> [name ...]
+    python tools/capture_plans.py <round> <suffix> [name ...]
 
-suffix is "before" or "after"; with no names, captures every bench.HEADLINE
+round names the output directory (e.g. "r18"); suffix is "before" or
+"after"; with no names, captures every bench.HEADLINE
 query. Plans are built at $SPARK_GRAFT_SF_DIR (default sf0.1) — plan SHAPE
 is what matters and it is scale-independent for these inputs, but we use
 the bench SF so AQE thresholds and statistics match what the bench runs.
@@ -22,8 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    round_name, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
 
     import bench
     from etl_tj_project_spark import harness
@@ -36,11 +37,11 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r18",
+        round_name,
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("plan_capture_r18")
+    spark = get_spark(f"plan_capture_{round_name}")
     for n in names:
         df = harness.REGISTRY[n].spark(spark, sf_dir)
         qe = df._jdf.queryExecution()
