@@ -209,7 +209,7 @@ def main() -> None:
     # memo's event log around each timed query and flag it cold
     # (paid a memo miss) or warm (FileScan only) so cross-round
     # per-query comparisons can condition on who paid.
-    from etl_tj_project_spark import harness_r12 as _hr12
+    from etl_tj_project_spark import reuse
 
     def timing_pass() -> tuple[dict[str, float], dict[str, dict], dict[str, dict]]:
         nonlocal run_anchor
@@ -220,12 +220,12 @@ def main() -> None:
         run_anchor = min(run_anchor, pre)
         for n in names:
             best = float("inf")
-            ev0 = len(_hr12.ARTIFACT_EVENTS)
+            ev0 = len(reuse.ARTIFACT_EVENTS)
             for _ in range(2):
                 t0 = time.perf_counter()
                 force(harness.REGISTRY[n].spark(spark, sf_dir))
                 best = min(best, time.perf_counter() - t0)
-            events = _hr12.ARTIFACT_EVENTS[ev0:]
+            events = reuse.ARTIFACT_EVENTS[ev0:]
             if events:
                 flags[n] = {
                     "state": (

@@ -155,9 +155,9 @@ def main(argv: list[str] | None = None) -> int:
 
             weights = None
             if args.classifier:
-                from etl_tj_project_spark.harness_llmdata import _CLF_WEIGHTS
+                from etl_tj_project_spark.operators.classifier import DEFAULT_WEIGHTS
 
-                weights = _CLF_WEIGHTS
+                weights = DEFAULT_WEIGHTS
             stats = build_training_corpus(
                 spark,
                 args.input,

@@ -1536,77 +1536,26 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Analytical query pack (TPC-H-style, semi/anti, cube/pivot, percentiles,
-# SQL-view surface, upsert-as-query) registers itself into REGISTRY.
-from etl_tj_project_spark import harness_analytics  # noqa: E402,F401
+# The domain modules register their entries into REGISTRY on import.
+# Relational: TPC-H shapes, semi/anti joins, CUBE/PIVOT, percentiles,
+# SQL-view surface, upsert-as-query, incremental aggregation.
+from etl_tj_project_spark import harness_relational  # noqa: E402,F401
 
-# Extended TPC-H pack: remaining classic shapes (correlated EXISTS,
-# count-distribution, scalar-subquery max/avg, disjunctive predicates).
-from etl_tj_project_spark import harness_tpch_ext  # noqa: E402,F401
+# Function surface: math/NULL/bitwise/map packs, cross-engine hazard
+# pins, Spark 4 SQL surface, gap fill, format roundtrips.
+from etl_tj_project_spark import harness_functions  # noqa: E402,F401
 
-# Corpus-curation pack: deterministic splits/sampling, sequence packing,
-# PII redaction, vocabulary stats, contamination checks.
+# Statistics: correlation/association, sketches, time series, search,
+# CUSUM, k-anonymity.
+from etl_tj_project_spark import harness_stats  # noqa: E402,F401
+
+# Corpus curation: splits, sampling, PII, TF-IDF, quality signals,
+# classifier and BPE tokenizer, chunking, embedding profiles.
 from etl_tj_project_spark import harness_curation  # noqa: E402,F401
 
-# Function-family packs part 2: math, NULL semantics, conditional aggs.
-from etl_tj_project_spark import harness_fnpacks2  # noqa: E402,F401
-
-# Incremental shapes: partial-aggregate merge, range-frame windows.
-from etl_tj_project_spark import harness_incremental  # noqa: E402,F401
-
-# LLM-data analytics pack 2: TF-IDF, n-grams, edit distance, gap-fill,
-# histograms, cohorts, sliding windows.
-from etl_tj_project_spark import harness_llmdata  # noqa: E402,F401
-
-# Function packs 3: posexplode, regexp_extract_all, null-safe join,
-# map/struct surface.
-from etl_tj_project_spark import harness_fnpacks3  # noqa: E402,F401
-
-# LLM-data analytics pack 3: adaptive stopword fraction, unigram
-# commonness, length percentile banding, quantized norm profiling.
-from etl_tj_project_spark import harness_llmdata2  # noqa: E402,F401
-
-# Function packs 4: bitwise aggregates, median/IQR, deterministic mode,
-# bounded rows-frame moving aggregates.
-from etl_tj_project_spark import harness_fnpacks4  # noqa: E402,F401
-
-# Deterministic-sketch pack: count-min heavy hitters + SQL Bloom filter,
-# both fully oracle-hash-checked via portable md5 hashing.
-from etl_tj_project_spark import harness_sketches  # noqa: E402,F401
-
-# Time-series pack: interpolation gap-fill, marker-reset running sums,
-# rolling covariance from exact decimal moment sums.
-from etl_tj_project_spark import harness_series  # noqa: E402,F401
-
-# Search & ranking pack: inverted index, positional phrase search,
-# Pareto frontier, Gini-impurity diversity.
-from etl_tj_project_spark import harness_search  # noqa: E402,F401
-
-# Hazard pins 2: window NULL ordering, regex replacement dialects,
-# outer explode row preservation.
-from etl_tj_project_spark import harness_hazards  # noqa: E402,F401
-
-# Analytics pack 2: chi-square cells, Spearman, imputation, index-100
-# rebase, vocabulary Jaccard, association rules, interval proration.
-from etl_tj_project_spark import harness_stats2  # noqa: E402,F401
-
-# Round-12 pack: recursive CTE + LATERAL (Spark 4 SQL surface),
-# containment dedup, overlapping chunking, window-only CUSUM,
-# Matryoshka truncated-dim recall.
-from etl_tj_project_spark import harness_r12  # noqa: E402,F401
-
-# Round-13 pack: the containment guardrail composed end-to-end
-# (canonicalize -> containment on survivors) and the streaming
-# dropDuplicatesWithinWatermark dedup entry (bounded replay).
-from etl_tj_project_spark import harness_r13  # noqa: E402,F401
-
-# Round-15 pack: the canonicalize-first guardrail applied to graph
-# analytics (triangle counting on survivors + analytic family cliques).
-from etl_tj_project_spark import harness_r15  # noqa: E402,F401
-
-# Round-16 pack: the LCC diagnostic acted on — the second, looser
-# dedup pass over the survivor residual graph (delta manifest).
-from etl_tj_project_spark import harness_r16  # noqa: E402,F401
+# Dedup guardrails: containment, family manifest and shared artifacts,
+# canonical survivors for pairwise and graph stages, streaming dedup.
+from etl_tj_project_spark import harness_dedup  # noqa: E402,F401
 
 from etl_tj_project_spark import parity  # noqa: E402
 

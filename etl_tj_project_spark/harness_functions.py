@@ -1,18 +1,49 @@
-"""Function-family pack 4: bitwise aggregates, exact median/IQR,
-deterministic mode, and BOUNDED rows-frame moving aggregates.
+"""Function-surface registry entries: math, NULL semantics, conditional and
+arg-extremum aggregates, positional explode, regexp extract-all,
+null-safe joins, the map/struct surface, bitwise aggregates, exact
+median/IQR, deterministic mode, bounded rows-frame moving aggregates,
+cross-engine hazard pins, the Spark 4 SQL surface (recursive CTE,
+LATERAL, pipe syntax, collations), gap fill, business-day arithmetic,
+and source-format roundtrips (XML, parquet mergeSchema).
 
-The gap this pack closes (audit of packs 1-3): every windowed aggregate
-registered so far uses an UNBOUNDED PRECEDING frame (running sums); the
-bounded sliding frame — the shape behind moving averages and rolling
-health metrics — exercises a different executor path (Spark keeps a
-sliding frame buffer; DuckDB uses segment trees), so FP-order bugs hide
-here unless sums are exact. All sliding sums therefore run in
-DECIMAL(18,2) (exact, order-independent) with ratios via IEEE division.
+Each query pins the CROSS-ENGINE CONVENTIONS — the return-type and
+edge-case differences between Spark and ANSI engines that silently
+corrupt results when code is ported (ceil's return type, null-safe
+equality spelling, arg-extremum tie behavior). The oracle states the
+*semantics* (what values come out), not the mechanism. Functions whose
+cross-library results are not bit-reproducible (ln/exp/pow with
+non-integer args — libm-dependent last-ulp; round-half on arbitrary
+doubles — tie-mode differs) are deliberately EXCLUDED; sqrt and integer
+powers are IEEE-exact and included.
 
-Mode is computed MANUALLY (count + row_number with a value tiebreak) in
-both engines: native ``mode()`` leaves tie order implementation-defined
-in both Spark and DuckDB, which is exactly the nondeterminism the parity
-gate exists to catch.
+Bounded sliding frames exercise a different executor path from the
+UNBOUNDED PRECEDING running sums (Spark keeps a sliding frame buffer;
+DuckDB uses segment trees), so FP-order bugs hide there unless sums are
+exact: all sliding sums run in DECIMAL(18,2) with ratios via IEEE
+division. Mode is computed MANUALLY (count + row_number with a value
+tiebreak) in both engines: native ``mode()`` leaves tie order
+implementation-defined.
+
+Hazard pins — places where two reasonable engines silently disagree
+unless the query author pins the semantics explicitly:
+* Window NULL ordering: Spark ASC defaults to NULLS FIRST, DuckDB (and
+  Postgres) to NULLS LAST — row_number over a nullable key differs on
+  every partition containing a NULL unless the ordering is explicit.
+* Regex replacement: Spark (Java regex) writes group references as $1
+  and replaces ALL occurrences; DuckDB (RE2) writes \\1 and replaces
+  only the FIRST unless the 'g' flag is passed. RE2 additionally
+  rejects backreferences in the PATTERN, so portable queries keep
+  groups in the replacement only.
+* explode vs explode_outer: an inner explode silently DROPS rows whose
+  array is empty; the outer form preserves them with NULL. Engines
+  without explode_outer state it as unnest(CASE WHEN empty THEN [NULL]
+  ELSE arr END).
+
+The recursive CTE, LATERAL and pipe-syntax entries pin Spark 4 query
+surface in the declarative forms a user migrating real SQL will write
+(khop_reachability unrolls frontier joins by hand; w1_topk_per_group
+does top-k with a window). Every ranking carries a unique id tie-break,
+NULLS LAST pinned on both sides.
 """
 
 from __future__ import annotations
@@ -22,9 +53,270 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
 from etl_tj_project_spark.harness import register
+from etl_tj_project_spark.schemas import AMOUNT
 from etl_tj_project_spark.sources.testdata import load_table
 
-AMOUNT = DecimalType(18, 2)
+
+# =========================================================================
+# Math, NULL semantics, conditional and arg-extremum aggregates
+# =========================================================================
+
+
+@register(
+    "math_function_pack",
+    """
+    SELECT p_partkey,
+           abs(p_retailprice - 1000.0)                    AS abs_delta,
+           CAST(ceil(p_retailprice) AS BIGINT)            AS price_ceil,
+           CAST(floor(p_retailprice) AS BIGINT)           AS price_floor,
+           CAST(sign(p_retailprice - 1000.0) AS INTEGER)  AS delta_sign,
+           mod(p_size, 7)                                 AS size_mod7,
+           sqrt(p_retailprice)                            AS price_sqrt,
+           CAST(power(p_size, 2) AS DOUBLE)               AS size_sq,
+           greatest(p_size, 25)                           AS size_hi,
+           least(p_size, 25)                              AS size_lo
+    FROM part
+    """,
+    doc="Math family with return types pinned: Spark ceil/floor yield "
+        "LONG where DuckDB yields DOUBLE (cast both to BIGINT); sign is "
+        "DOUBLE in Spark, pinned to INT; sqrt is IEEE-correctly-rounded "
+        "on both engines so it hash-matches; power restricted to integer "
+        "bases/exponents (libm-exact). ln/exp/round-half excluded — see "
+        "module docstring",
+)
+def math_function_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    p = load_table(spark, sf_dir, "part")
+    price = F.col("p_retailprice")
+    size = F.col("p_size")
+    return p.select(
+        "p_partkey",
+        F.abs(price - 1000.0).alias("abs_delta"),
+        F.ceil(price).cast("long").alias("price_ceil"),
+        F.floor(price).cast("long").alias("price_floor"),
+        F.signum(price - 1000.0).cast("int").alias("delta_sign"),
+        (size % 7).alias("size_mod7"),
+        F.sqrt(price).alias("price_sqrt"),
+        F.pow(size, 2).cast("double").alias("size_sq"),
+        F.greatest(size, F.lit(25)).alias("size_hi"),
+        F.least(size, F.lit(25)).alias("size_lo"),
+    )
+
+
+@register(
+    "null_semantics_pack",
+    """
+    SELECT c_custkey,
+           nullif(c_mktsegment, 'BUILDING')               AS seg_nb,
+           coalesce(nullif(c_mktsegment, 'BUILDING'), 'N/A') AS seg_or_na,
+           (nullif(c_mktsegment, 'BUILDING')
+              IS NOT DISTINCT FROM nullif(c_mktsegment, 'BUILDING'))
+                                                          AS nullsafe_self,
+           (nullif(c_mktsegment, 'BUILDING') IS NOT DISTINCT FROM 'AUTOMOBILE')
+                                                          AS nullsafe_auto,
+           (nullif(c_mktsegment, 'BUILDING') IS NULL)     AS was_building,
+           CASE WHEN nullif(c_mktsegment, 'BUILDING') IS NOT NULL
+                THEN 'kept' ELSE 'dropped' END            AS nvl2_ish
+    FROM customer
+    """,
+    doc="NULL-semantics family: NULLIF-manufactured nulls, COALESCE "
+        "defaults, null-safe equality (Spark's <=> / eqNullSafe is ANSI "
+        "IS NOT DISTINCT FROM — TRUE on null=null where plain = yields "
+        "NULL), IS NULL flags, and the NVL2 conditional. These are the "
+        "semantics the reference leans on implicitly (its left-join keys "
+        "and to_bool_safe blanks all produce NULL groups, SURVEY §2.5)",
+)
+def null_semantics_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = load_table(spark, sf_dir, "customer")
+    seg = F.nullif(F.col("c_mktsegment"), F.lit("BUILDING"))
+    return c.select(
+        "c_custkey",
+        seg.alias("seg_nb"),
+        F.coalesce(seg, F.lit("N/A")).alias("seg_or_na"),
+        seg.eqNullSafe(seg).alias("nullsafe_self"),
+        seg.eqNullSafe(F.lit("AUTOMOBILE")).alias("nullsafe_auto"),
+        seg.isNull().alias("was_building"),
+        F.when(seg.isNotNull(), "kept").otherwise("dropped").alias("nvl2_ish"),
+    )
+
+
+@register(
+    "conditional_agg_pack",
+    """
+    SELECT o_orderstatus,
+           count_if(CAST(o_totalprice AS DOUBLE) > 200000.0) AS n_big,
+           bool_or(o_orderpriority = '1-URGENT')          AS any_urgent,
+           bool_and(o_orderpriority <> '5-LOW')           AS none_low,
+           max_by(o_totalprice, o_orderkey)               AS price_of_last,
+           min_by(o_totalprice, o_orderkey)               AS price_of_first,
+           max(o_totalprice)                              AS max_price
+    FROM orders
+    GROUP BY o_orderstatus
+    """,
+    doc="Conditional / arg-extremum aggregates: count_if, bool_or/and, "
+        "max_by/min_by. The arg-extremum ORDERING KEY is the unique "
+        "o_orderkey — max_by over a non-unique key is tie-nondeterministic "
+        "on both engines and would never hash-match; keying on the unique "
+        "column is the deterministic idiom (the argmin_join_back query "
+        "shows the window rewrite for non-unique keys)",
+)
+def conditional_agg_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders")
+    urgent = F.col("o_orderpriority") == "1-URGENT"
+    return o.groupBy("o_orderstatus").agg(
+        F.count_if(F.col("o_totalprice").cast("double") > 200000.0).alias(
+            "n_big"
+        ),
+        F.bool_or(urgent).alias("any_urgent"),
+        F.bool_and(F.col("o_orderpriority") != "5-LOW").alias("none_low"),
+        F.max_by("o_totalprice", "o_orderkey").alias("price_of_last"),
+        F.min_by("o_totalprice", "o_orderkey").alias("price_of_first"),
+        F.max("o_totalprice").alias("max_price"),
+    )
+
+
+# =========================================================================
+# Positional explode, regexp extract-all, null-safe joins, map/struct
+# =========================================================================
+
+
+@register(
+    "posexplode_tokens",
+    r"""
+    WITH t AS (
+      SELECT doc_id,
+             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+                  ELSE regexp_split_to_array(trim(lower(text)), '\s+') END
+               AS toks
+      FROM documents WHERE doc_id < 50
+    )
+    SELECT t.doc_id, CAST(x.i - 1 AS INTEGER) AS pos, t.toks[CAST(x.i AS INTEGER)] AS term
+    FROM t, UNNEST(range(1, len(t.toks) + 1)) AS x(i)
+    """,
+    doc="Positional explode (LATERAL VIEW posexplode): token with its "
+        "0-based position — the order-preserving explode every sequence "
+        "feature (n-gram windows, position embeddings) builds on. "
+        "Engine-side explode, no Python",
+)
+def posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    with_toks = d.select(
+        "doc_id",
+        F.when(F.trim("text") == "", F.array()).otherwise(toks).alias("toks"),
+    )
+    return with_toks.select(
+        "doc_id", F.posexplode("toks").alias("pos", "term")
+    )
+
+
+@register(
+    "regexp_extract_all_numbers",
+    r"""
+    SELECT doc_id,
+           coalesce(array_to_string(regexp_extract_all(text, '[0-9]+'), ','),
+                    '') AS nums_csv,
+           CAST(len(regexp_extract_all(text, '[0-9]+')) AS INTEGER)
+             AS n_nums,
+           CASE WHEN len(regexp_extract_all(text, '[0-9]+')) > 0
+                THEN regexp_extract_all(text, '[0-9]+')[1] END AS first_num
+    FROM documents
+    """,
+    doc="regexp_extract_all: every digit run per document as an ordered "
+        "array (left-to-right in both engines), plus count and first "
+        "match — the extraction primitive behind PII scans and numeric "
+        "claim mining. The ordered array is surfaced as its CSV string "
+        "(scalar columns only — raw array cells break pandas-based "
+        "canonicalizers downstream)",
+)
+def regexp_extract_all_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents")
+    nums = F.regexp_extract_all("text", F.lit("[0-9]+"))
+    return d.select(
+        "doc_id",
+        F.array_join(nums, ",").alias("nums_csv"),
+        F.size(nums).alias("n_nums"),
+        F.when(F.size(nums) > 0, F.element_at(nums, 1)).alias("first_num"),
+    )
+
+
+@register(
+    "null_safe_join_agg",
+    """
+    WITH c AS (
+      SELECT c_custkey, nullif(c_mktsegment, 'BUILDING') AS seg
+      FROM customer
+    ), labels AS (
+      SELECT DISTINCT nullif(c_mktsegment, 'BUILDING') AS seg,
+             coalesce(nullif(c_mktsegment, 'BUILDING'), 'SUPPRESSED')
+               AS seg_label
+      FROM customer
+    )
+    SELECT l.seg_label, COUNT(*) AS n_customers
+    FROM c JOIN labels l ON c.seg IS NOT DISTINCT FROM l.seg
+    GROUP BY l.seg_label
+    """,
+    doc="Null-safe equality join (Spark <=> / eqNullSafe, SQL IS NOT "
+        "DISTINCT FROM): NULL keys match each other instead of being "
+        "dropped — the semantics needed when NULL is a real category "
+        "(suppressed segment) rather than absence. Plain equi-join "
+        "machinery applies, so it broadcasts/shuffles like any join",
+)
+def null_safe_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", F.nullif("c_mktsegment", F.lit("BUILDING")).alias("seg")
+    )
+    labels = (
+        c.select("seg").distinct()
+        .select("seg", F.coalesce("seg", F.lit("SUPPRESSED")).alias("seg_label"))
+    )
+    return (
+        c.join(F.broadcast(labels), c["seg"].eqNullSafe(labels["seg"]))
+        .groupBy("seg_label")
+        .agg(F.count(F.lit(1)).alias("n_customers"))
+    )
+
+
+@register(
+    "map_struct_pack",
+    """
+    SELECT o_orderkey,
+           o_orderstatus                                   AS status_via_map,
+           CAST(2 AS INTEGER)                              AS map_size,
+           'prio,status'                                   AS keys_sorted,
+           o_orderpriority                                 AS prio_via_struct,
+           o_orderstatus || ':' || o_orderpriority         AS packed
+    FROM orders
+    """,
+    doc="Map/struct surface: create_map + element_at, map_keys (sorted "
+        "for determinism), struct field access, struct->string packing. "
+        "The oracle states the equivalent direct expressions — the pair "
+        "checks Spark's map/struct functions produce exactly the "
+        "underlying values. Maps/structs never cross the client "
+        "boundary (engine reprs differ); only extracted scalars do",
+)
+def map_struct_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders")
+    m = F.create_map(
+        F.lit("status"), F.col("o_orderstatus"),
+        F.lit("prio"), F.col("o_orderpriority"),
+    )
+    st = F.struct(
+        F.col("o_orderstatus").alias("s"), F.col("o_orderpriority").alias("p")
+    )
+    return o.select(
+        "o_orderkey",
+        F.element_at(m, "status").alias("status_via_map"),
+        F.size(m).alias("map_size"),
+        F.array_join(F.array_sort(F.map_keys(m)), ",").alias("keys_sorted"),
+        st.getField("p").alias("prio_via_struct"),
+        F.concat_ws(":", st.getField("s"), st.getField("p")).alias("packed"),
+    )
+
+
+# =========================================================================
+# Bitwise aggregates, exact median/IQR, deterministic mode, bounded
+# rows-frame moving aggregates
+# =========================================================================
 
 
 @register(
@@ -845,8 +1137,6 @@ def share_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "round(9) absorbs the last-ulp of pow(x, 1.5)",
 )
 def moment_stats_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.types import DecimalType
-
     li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast(DecimalType(38, 6))
     sums = li.groupBy("l_returnflag").agg(
@@ -1114,8 +1404,6 @@ def pareto_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the day-grain aggregate, never the event stream",
 )
 def rolling_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.types import DecimalType
-
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).alias("n")
@@ -1608,3 +1896,587 @@ def timezone_dst_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             == F.col("mts")
         ).alias("ny_roundtrip_ok"),
     )
+
+
+# =========================================================================
+# Cross-engine hazard pins: window NULL ordering, regex replacement
+# dialects, outer explode
+# =========================================================================
+
+
+@register(
+    "window_null_ordering_pack",
+    """
+    WITH t AS (
+      SELECT event_id, user_id, ts,
+             NULLIF(event_type, 'view') AS nk
+      FROM events
+    )
+    SELECT event_id, user_id,
+           CAST(row_number() OVER (PARTITION BY user_id
+                 ORDER BY nk ASC NULLS FIRST, ts, event_id) AS BIGINT)
+             AS rn_nulls_first,
+           CAST(row_number() OVER (PARTITION BY user_id
+                 ORDER BY nk DESC NULLS LAST, ts, event_id) AS BIGINT)
+             AS rn_nulls_last
+    FROM t
+    """,
+    doc="NULL placement in window ordering pinned EXPLICITLY on both "
+        "sides: Spark's ASC default is NULLS FIRST while DuckDB/"
+        "Postgres default to NULLS LAST (and the reverse for DESC), so "
+        "any rank over a nullable key silently renumbers every "
+        "NULL-containing partition when a query moves engines unless "
+        "asc_nulls_first/desc_nulls_last is stated. NULLIF manufactures "
+        "the NULLs deterministically so the pin is non-vacuous in every "
+        "partition",
+)
+def window_null_ordering_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    t = ev.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.nullif(F.col("event_type"), F.lit("view")).alias("nk"),
+    )
+    w_first = Window.partitionBy("user_id").orderBy(
+        F.col("nk").asc_nulls_first(), "ts", "event_id"
+    )
+    w_last = Window.partitionBy("user_id").orderBy(
+        F.col("nk").desc_nulls_last(), "ts", "event_id"
+    )
+    return t.select(
+        "event_id",
+        "user_id",
+        F.row_number().over(w_first).cast("long").alias("rn_nulls_first"),
+        F.row_number().over(w_last).cast("long").alias("rn_nulls_last"),
+    )
+
+
+@register(
+    "regex_backreference_pack",
+    r"""
+    SELECT doc_id,
+           md5(regexp_replace(lower(text), '([a-z]+) ([a-z]+)', '\2 \1', 'g'))
+             AS swapped_fp,
+           substr(regexp_replace(lower(text), '([a-z]+) ([a-z]+)', '\2 \1',
+                  'g'), 1, 40) AS swapped_head
+    FROM documents
+    """,
+    doc="Regex replacement dialect pin (word-pair swap over every doc): "
+        "Spark/Java spells group references $1 and replaces ALL "
+        "matches; DuckDB/RE2 spells them \\1 and replaces only the "
+        "FIRST without the 'g' flag — the md5 fingerprint hash-checks "
+        "that both spellings + the explicit global flag produce "
+        "byte-identical rewrites. Pattern-side backreferences are "
+        "avoided entirely: RE2 rejects them, so the portable subset "
+        "keeps groups in the replacement only",
+)
+def regex_backreference_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents")
+    swapped = F.regexp_replace(
+        F.lower(F.col("text")), r"([a-z]+) ([a-z]+)", r"$2 $1"
+    )
+    return d.select(
+        "doc_id",
+        F.md5(swapped).alias("swapped_fp"),
+        F.substring(swapped, 1, 40).alias("swapped_head"),
+    )
+
+
+@register(
+    "explode_outer_empty_preserved",
+    """
+    WITH arrs AS (
+      SELECT doc_id,
+             list_filter(regexp_extract_all(lower(text), '[a-z]+'),
+                         t -> len(t) >= 8) AS long_toks
+      FROM documents
+    )
+    SELECT doc_id,
+           unnest(CASE WHEN len(long_toks) = 0
+                       THEN [CAST(NULL AS VARCHAR)]
+                       ELSE long_toks END) AS long_token
+    FROM arrs
+    """,
+    doc="explode_outer row preservation: an inner explode silently "
+        "DROPS every document whose array is empty (~20% of docs have "
+        "no >=8-letter token — a LEFT-JOIN-shaped data loss bug when "
+        "the exploded table is later re-joined to the corpus); the "
+        "outer form keeps them as NULL rows. The oracle states the "
+        "engine-portable rewrite: unnest over CASE WHEN empty THEN "
+        "[NULL] ELSE arr END",
+)
+def explode_outer_empty_preserved(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents")
+    long_toks = F.filter(
+        F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)"),
+        lambda t: F.length(t) >= 8,
+    )
+    return d.select(
+        "doc_id", F.explode_outer(long_toks).alias("long_token")
+    )
+
+
+# =========================================================================
+# Spark 4 SQL surface: recursive CTE + correlated LATERAL
+# =========================================================================
+
+# The supplier-key binary tree: parent(k) = k div 2, root = 1. A derived
+# hierarchy (the testdata has no explicit parent column), but the QUERY
+# under test is the real thing: a distributed recursive CTE whose
+# per-iteration work is a self-union that drains as nodes reach the
+# root. Depth is log2(N) — 14 levels at sf1.0's 10k suppliers — and
+# each level's frontier halves nothing (every key climbs until 1), so
+# total recursive rows are N * log2(N): linear-ish, never quadratic.
+_RECURSIVE_SQL = """
+    WITH RECURSIVE anc AS (
+      SELECT CAST(s_suppkey AS BIGINT) AS s_suppkey,
+             CAST(s_suppkey AS BIGINT) AS node,
+             CAST(0 AS BIGINT)         AS depth,
+             CAST(0 AS BIGINT)         AS anc_sum
+      FROM {supplier}
+      UNION ALL
+      SELECT s_suppkey, {half}, depth + 1, anc_sum + ({half})
+      FROM anc WHERE node > 1
+    )
+    SELECT s_suppkey,
+           CAST(max(depth) AS BIGINT)   AS depth_to_root,
+           CAST(max(anc_sum) AS BIGINT) AS anc_key_sum
+    FROM anc GROUP BY s_suppkey
+"""
+
+
+@register(
+    "recursive_cte_tree_depth",
+    _RECURSIVE_SQL.format(supplier="supplier", half="node // 2"),
+    doc="WITH RECURSIVE ancestor climb over the supplier-key binary "
+        "tree (parent = key div 2): per-node depth-to-root and "
+        "ancestor-key sum. Exercises Spark 4's recursive CTE operator "
+        "(UnionLoop) — the declarative twin of khop_reachability's "
+        "hand-unrolled frontier joins. Work is N*log2(N) recursive "
+        "rows; each iteration is one distributed self-union, "
+        "depth <= 14 at sf1.0",
+)
+def recursive_cte_tree_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    load_table(spark, sf_dir, "supplier").createOrReplaceTempView(
+        "r12_supplier"
+    )
+    return spark.sql(
+        _RECURSIVE_SQL.format(supplier="r12_supplier", half="node div 2")
+    )
+
+
+_LATERAL_SQL = """
+    SELECT n.n_name, t.c_custkey, t.c_acctbal
+    FROM {nation} n,
+    LATERAL (
+      SELECT c_custkey, c_acctbal
+      FROM {customer} c
+      WHERE c.c_nationkey = n.n_nationkey
+      ORDER BY c_acctbal DESC, c_custkey
+      LIMIT 2
+    ) t
+"""
+
+
+@register(
+    "lateral_correlated_topk",
+    _LATERAL_SQL.format(nation="nation", customer="customer"),
+    doc="Correlated LATERAL subquery with ORDER BY + LIMIT: top-2 "
+        "customers by account balance per nation, written the way a "
+        "migrating SQL user writes it. Catalyst rewrites the lateral "
+        "into a ranked join (DomainJoin -> window under the hood), so "
+        "the physical plan matches the w1_topk_per_group shape — the "
+        "entry pins that the DECLARATIVE form stays available and "
+        "correct. Unique-key tie-break (c_custkey) keeps the LIMIT "
+        "deterministic on both engines",
+)
+def lateral_correlated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    load_table(spark, sf_dir, "nation").createOrReplaceTempView("r12_nation")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
+        "r12_customer"
+    )
+    return spark.sql(
+        _LATERAL_SQL.format(nation="r12_nation", customer="r12_customer")
+    )
+
+
+# =========================================================================
+# LOCF/NOCB gap fill, business-day arithmetic, log2-bucket histogram
+# =========================================================================
+
+@register(
+    "locf_backfill_pack",
+    """
+    WITH base AS (
+      SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+             CASE WHEN event_type = 'error' THEN NULL ELSE value END
+               AS value_masked
+      FROM events
+    )
+    SELECT event_id, user_id, value_masked,
+           last_value(value_masked IGNORE NULLS) OVER (
+             PARTITION BY user_id ORDER BY ts_us, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS locf_value,
+           first_value(value_masked IGNORE NULLS) OVER (
+             PARTITION BY user_id ORDER BY ts_us, event_id
+             ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+             AS nocb_value
+    FROM base
+    """,
+    doc="LOCF / NOCB gap fill — the hypertable sensor-series repair "
+        "pair (last-observation-carried-forward and "
+        "next-observation-carried-backward). 'Missing' is a SEMANTIC "
+        "rule (error events carry no measurement), not synthesized "
+        "NULLs. Both directions are IGNORE NULLS window functions over "
+        "one (user, time) sort — Spark evaluates the two frames off "
+        "the same partitioned sort, one exchange total; "
+        "complementary to time_bucket_interpolate (which fills by "
+        "linear interpolation between neighbors, this carries "
+        "observations). Unique (ts_us, event_id) tie-break",
+)
+def locf_backfill_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    base = ev.select(
+        "event_id",
+        "user_id",
+        F.unix_micros("ts").alias("ts_us"),
+        F.when(F.col("event_type") == "error", F.lit(None).cast("double"))
+        .otherwise(F.col("value"))
+        .alias("value_masked"),
+    )
+    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    locf = F.last("value_masked", ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    nocb = F.first("value_masked", ignorenulls=True).over(
+        w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    )
+    return base.select(
+        "event_id",
+        "user_id",
+        "value_masked",
+        locf.alias("locf_value"),
+        nocb.alias("nocb_value"),
+    )
+
+
+@register(
+    "business_day_pack",
+    """
+    WITH d AS (
+      SELECT o_orderkey, CAST(o_orderdate AS DATE) AS order_date,
+             isodow(CAST(o_orderdate AS DATE)) - 1 AS wd
+      FROM orders
+    )
+    SELECT o_orderkey, order_date,
+           order_date + CAST(CASE wd WHEN 4 THEN 3 WHEN 5 THEN 2 ELSE 1 END
+                             AS INTEGER) AS next_bday,
+           order_date + CAST((CASE wd WHEN 5 THEN 2 WHEN 6 THEN 1 ELSE 0 END)
+                             + 7 AS INTEGER) AS bday_plus5,
+           CAST(len(list_filter(range(1, 31),
+                i -> isodow(order_date + i::INTEGER) <= 5)) AS BIGINT)
+             AS bdays_next30
+    FROM d
+    """,
+    doc="Business-day arithmetic pack (weekend-skip; holiday tables "
+        "would broadcast-anti-join on top): next business day "
+        "(Fri +3 / Sat +2 / else +1), plus-5-business-days (roll a "
+        "weekend start to Monday, then one calendar week — the "
+        "standard settlement-date rule), and the business-day count in "
+        "the next 30 calendar days via an unrolled 30-element "
+        "filter(sequence) — per-row expression work, no shuffle beyond "
+        "the scan. Weekday convention pinned cross-engine: Spark "
+        "weekday() is 0=Monday, DuckDB isodow()-1 matches it exactly",
+)
+def business_day_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders")
+    d = o.select(
+        "o_orderkey",
+        F.col("o_orderdate").cast("date").alias("order_date"),
+        F.expr("weekday(CAST(o_orderdate AS DATE))").alias("wd"),
+    )
+    next_off = (
+        F.when(F.col("wd") == 4, 3).when(F.col("wd") == 5, 2).otherwise(1)
+    )
+    roll_off = (
+        F.when(F.col("wd") == 5, 2).when(F.col("wd") == 6, 1).otherwise(0)
+    )
+    return d.select(
+        "o_orderkey",
+        "order_date",
+        F.expr(
+            "date_add(order_date, CASE wd WHEN 4 THEN 3 WHEN 5 THEN 2 "
+            "ELSE 1 END)"
+        ).alias("next_bday"),
+        F.expr(
+            "date_add(order_date, (CASE wd WHEN 5 THEN 2 WHEN 6 THEN 1 "
+            "ELSE 0 END) + 7)"
+        ).alias("bday_plus5"),
+        F.expr(
+            "size(filter(sequence(1, 30), "
+            "i -> weekday(date_add(order_date, i)) < 5))"
+        )
+        .cast("long")
+        .alias("bdays_next30"),
+    )
+
+
+@register(
+    "log2_bucket_histogram",
+    """
+    WITH c AS (
+      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+               AS cents
+      FROM orders
+    )
+    SELECT CAST(length(printf('%b', cents)) - 1 AS BIGINT) AS log2_bucket,
+           CAST(count(*) AS BIGINT)  AS n_orders,
+           CAST(sum(cents) AS BIGINT) AS sum_cents,
+           CAST(min(cents) AS BIGINT) AS min_cents,
+           CAST(max(cents) AS BIGINT) AS max_cents
+    FROM c GROUP BY 1
+    """,
+    doc="Power-of-two (log2) bucket histogram of order totals — the "
+        "long-tail profiling shape linear buckets "
+        "(histogram_fixed_buckets) can't show. floor(log2(x)) computed "
+        "EXACTLY as binary-representation length minus one (Spark "
+        "length(bin(x)), DuckDB length(printf('%b', x))) — no floating "
+        "log whose rounding could flip a value at a bucket boundary; "
+        "money through DECIMAL(18,2) cents so the sums are exact "
+        "BIGINTs. One scan, one aggregate over ~30 buckets",
+)
+def log2_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders")
+    cents = (F.col("o_totalprice").cast(AMOUNT) * 100).cast("long")
+    return (
+        o.select(cents.alias("cents"))
+        .groupBy(
+            (F.length(F.bin(F.col("cents"))) - 1)
+            .cast("long")
+            .alias("log2_bucket")
+        )
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders"),
+            F.sum("cents").cast("long").alias("sum_cents"),
+            F.min("cents").cast("long").alias("min_cents"),
+            F.max("cents").cast("long").alias("max_cents"),
+        )
+    )
+
+
+# =========================================================================
+# Spark 4 SQL pipe syntax + collation semantics
+# =========================================================================
+
+_PIPE_SQL = """
+    FROM {orders}
+    |> WHERE o_orderstatus = 'F'
+    |> AGGREGATE CAST(count(*) AS BIGINT) AS n_orders,
+                 CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+                      AS DECIMAL(18,2)) AS revenue
+       GROUP BY o_orderpriority
+    |> WHERE n_orders > 100
+    |> SELECT o_orderpriority, n_orders, revenue
+"""
+
+
+@register(
+    "sql_pipe_syntax_agg",
+    """
+    SELECT o_orderpriority,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
+             AS revenue
+    FROM orders
+    WHERE o_orderstatus = 'F'
+    GROUP BY o_orderpriority
+    HAVING count(*) > 100
+    """,
+    doc="Spark 4 SQL pipe syntax (|> operators): filter |> aggregate "
+        "|> post-aggregation filter |> projection, chained in reading "
+        "order the way the GoogleSQL pipe paper argues analysts think. "
+        "Parses to the IDENTICAL logical plan as the nested form (the "
+        "oracle restates it as plain ANSI WHERE/GROUP BY/HAVING), so "
+        "this pins that the surface exists and optimizes normally — "
+        "pushdown, partial aggregation, the works. Money through "
+        "DECIMAL(18,2) before summing, per house rule",
+)
+def sql_pipe_syntax_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("r12_orders")
+    return spark.sql(_PIPE_SQL.format(orders="r12_orders"))
+
+
+@register(
+    "collation_lcase_semantics",
+    """
+    WITH t AS (
+      SELECT p_type,
+             CASE WHEN p_partkey % 2 = 0 THEN lower(p_type)
+                  ELSE upper(p_type) END AS p_type_mixed
+      FROM part
+    )
+    SELECT CAST(count(DISTINCT p_type_mixed) AS BIGINT)
+             AS distinct_binary,
+           CAST(count(DISTINCT lower(p_type_mixed)) AS BIGINT)
+             AS distinct_lcase,
+           CAST(sum(CASE WHEN lower(p_type_mixed) = lower(p_type)
+                    THEN 1 ELSE 0 END) AS BIGINT) AS eq_lcase_rows
+    FROM t
+    """,
+    doc="Spark 4 collation semantics (UTF8_LCASE): distinct-count and "
+        "equality under a case-insensitive collation vs binary "
+        "collation, over a deterministically case-mangled p_type "
+        "(even keys lowered, odd keys uppered). The Spark side uses "
+        "REAL collated expressions — collate(x, 'UTF8_LCASE') drives "
+        "the distinct-hash and the = comparison — while the oracle "
+        "restates the same semantics with lower() (exactly equivalent "
+        "on this ASCII corpus; ICU edge cases like dotted-I are the "
+        "collation's value-add and are out of testdata scope). "
+        "Scalars only — collated GROUP BY keys pick a nondeterministic "
+        "case representative, so the entry returns counts, never a "
+        "collated key column",
+)
+def collation_lcase_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    p = load_table(spark, sf_dir, "part")
+    mixed = F.when(
+        F.col("p_partkey") % 2 == 0, F.lower("p_type")
+    ).otherwise(F.upper("p_type"))
+    t = p.select("p_type", mixed.alias("p_type_mixed"))
+    lc = F.expr("collate(p_type_mixed, 'UTF8_LCASE')")
+    return t.agg(
+        F.countDistinct("p_type_mixed").cast("long").alias("distinct_binary"),
+        F.countDistinct(lc).cast("long").alias("distinct_lcase"),
+        F.sum(
+            F.when(
+                lc == F.expr("collate(p_type, 'UTF8_LCASE')"), 1
+            ).otherwise(0)
+        )
+        .cast("long")
+        .alias("eq_lcase_rows"),
+    )
+
+
+# =========================================================================
+# Source-format surface: XML roundtrip (Spark 4 built-in XML source),
+# parquet mergeSchema physical evolution
+# =========================================================================
+
+@register(
+    "xml_write_roundtrip",
+    """
+    SELECT doc_id,
+           concat('a<b>&amp;</b> "', source, '" &x') AS hazard,
+           CASE WHEN lang = 'en' THEN NULL ELSE lang END AS maybe_null,
+           CAST(n_chars AS DECIMAL(18,2)) AS n_chars_dec,
+           DATE '2024-01-01' + CAST(doc_id % 7 AS INT) AS shard_date
+    FROM documents WHERE doc_id < 500
+    """,
+    doc="XML export/import fidelity under the correctness gate — the "
+        "fourth leg of the format matrix (parquet/ORC/CSV/JSONL "
+        "roundtrips exist), exercising Spark 4's BUILT-IN xml source "
+        "(the spark-xml package merged into core). The staged frame "
+        "carries the XML hazard classes: markup characters < > & and "
+        "double quotes in element text (forcing the writer's entity "
+        "escaping), a nullable column (absent element must come back "
+        "NULL), and DECIMAL/DATE that must survive text serialization "
+        "under an explicit read schema with rowTag pinned on both "
+        "sides. Oracle restates the staged values closed-form, so the "
+        "hash gate proves escaping + NULL + numeric fidelity through "
+        "the writer+reader pair. Scale note: XML is a line-splittable "
+        "format only per rowTag block; at 100 TB it is an INGEST "
+        "format — the first job rewrites to parquet",
+)
+def xml_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
+    staged = d.select(
+        "doc_id",
+        F.concat(
+            F.lit('a<b>&amp;</b> "'), F.col("source"), F.lit('" &x')
+        ).alias("hazard"),
+        F.nullif(F.col("lang"), F.lit("en")).alias("maybe_null"),
+        F.col("n_chars").cast(AMOUNT).alias("n_chars_dec"),
+        F.date_add(
+            F.lit("2024-01-01").cast("date"),
+            (F.col("doc_id") % 7).cast("int"),
+        ).alias("shard_date"),
+    )
+    out = tempfile.mkdtemp(prefix="tj_xml_roundtrip_")
+    try:
+        staged.write.mode("overwrite").format("xml").option(
+            "rowTag", "doc"
+        ).save(out)
+        back = (
+            spark.read.schema(staged.schema)
+            .format("xml")
+            .option("rowTag", "doc")
+            .load(out)
+        )
+        # Materialize so the temp dir can be removed now (documents is
+        # the small table; same pattern as the other format roundtrips).
+        return spark.createDataFrame(back.collect(), schema=back.schema)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+@register(
+    "parquet_merge_schema_evolution",
+    """
+    SELECT doc_id,
+           CAST(n_chars AS BIGINT) AS n_chars,
+           CAST(NULL AS VARCHAR)  AS lang,
+           CAST(1 AS BIGINT)      AS batch
+    FROM documents WHERE doc_id < 250
+    UNION ALL
+    SELECT doc_id,
+           CAST(NULL AS BIGINT)   AS n_chars,
+           lang,
+           CAST(2 AS BIGINT)      AS batch
+    FROM documents WHERE doc_id >= 250 AND doc_id < 500
+    """,
+    doc="Physical schema evolution through parquet mergeSchema: batch 1 "
+        "writes (doc_id, n_chars), batch 2 writes (doc_id, lang) — "
+        "different physical schemas in one table directory, partitioned "
+        "by batch. Reading with mergeSchema=true must union the footers "
+        "(absent columns NULL per file) — the lake-format behavior "
+        "union_by_name_schema_evolution pins LOGICALLY, here pinned "
+        "through the actual parquet footer-merge machinery. At 100 TB "
+        "mergeSchema reads every footer; production tables register the "
+        "merged schema in a catalog instead — the entry documents the "
+        "cost while proving the semantics",
+)
+def parquet_merge_schema_evolution(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import os
+    import shutil
+    import tempfile
+
+    d = load_table(spark, sf_dir, "documents")
+    b1 = d.filter(F.col("doc_id") < 250).select(
+        "doc_id", F.col("n_chars").cast("long").alias("n_chars")
+    )
+    b2 = d.filter((F.col("doc_id") >= 250) & (F.col("doc_id") < 500)).select(
+        "doc_id", "lang"
+    )
+    out = tempfile.mkdtemp(prefix="tj_mergeschema_")
+    try:
+        b1.write.mode("overwrite").parquet(os.path.join(out, "batch=1"))
+        b2.write.mode("overwrite").parquet(os.path.join(out, "batch=2"))
+        back = (
+            spark.read.option("mergeSchema", True)
+            .parquet(out)
+            .select(
+                "doc_id",
+                F.col("n_chars").cast("long").alias("n_chars"),
+                F.col("lang").cast("string").alias("lang"),
+                F.col("batch").cast("long").alias("batch"),
+            )
+        )
+        return spark.createDataFrame(back.collect(), schema=back.schema)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

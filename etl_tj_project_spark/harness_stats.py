@@ -1,21 +1,51 @@
-"""Analytics pack 2: association/correlation statistics and interval
-proration.
+"""Statistics registry entries: association and correlation statistics,
+interval proration, deterministic sketches (count-min, Bloom filter),
+time-series shapes, search and ranking, a window-only CUSUM changepoint
+detector, and a k-anonymity audit.
 
-The statistical-audit shapes a curation pipeline runs AFTER ingest:
-is language independent of source (chi-square), do two rankings agree
-(Spearman), fill sensor dropout from group behavior (imputation),
-index a series to its base period, compare source vocabularies
-(set Jaccard), mine part-affinity rules (support/confidence/lift),
-and prorate an interval-valued measure across calendar buckets.
+These are the statistical-audit shapes a curation pipeline runs AFTER
+ingest: is language independent of source (chi-square), do two rankings
+agree (Spearman), fill sensor dropout from group behavior (imputation),
+index a series to its base period, compare source vocabularies (set
+Jaccard), mine part-affinity rules (support/confidence/lift), prorate an
+interval-valued measure across calendar buckets, build a term→postings
+index and answer a positional phrase query through index joins.
 
 Every entry follows the exact-rational-then-one-division rule: all
 aggregation happens on integers/decimals (order-independent, hence
 cross-engine hash-stable), and IEEE double enters only in the final
 scalar division(s), rounded. No libm (log/exp/pow) anywhere.
 
+Sketches: like the KMV distinct sketch (harness_functions), count-min
+and Bloom are built from md5-derived hashes that both engines compute
+identically (``operators.classifier.md5_bucket``), so — unlike HLL,
+whose register layout is engine-private — every number carries a FULL
+cross-engine oracle hash check: the sketch contract itself (count-min
+never under-counts; Bloom never misses a true member) is pinned as
+data, not prose.
+
+* Count-min build is ONE keyed shuffle of d×N rows collapsing to d×w
+  cells — partial aggregation (map-side combine) makes the exchange
+  traffic O(d×w × partitions) regardless of input rows, which is the
+  whole point of the sketch at 100 TB. The probe side joins a
+  constant-size (d×w ≤ 256-row) sketch, always broadcast.
+* The Bloom bit set is a DISTINCT over k×|build| positions bounded by m
+  (512 here), broadcast to the probe side — the pre-AQE manual form of
+  what the engine's runtime bloom-filter join injection does
+  (test_runtime_bloom_filter_join_fires proves the native path fires);
+  materializing it as data makes the false-positive arithmetic
+  checkable and the filter REUSABLE across queries, which runtime
+  injection is not.
+
+CUSUM is the classic sequential changepoint statistic, here computed
+with PURE window functions via the identity
+``max(0, S_{t-1} + x_t) == R_t - min(0, min_{k<=t} R_k)``
+(running sum minus clipped running min) — no recursion, no UDF, two
+window passes that scale as ordinary partitioned sorts.
+
 Reference parity note: the reference (awinardi1004/etl-tj-project,
 dags/dag_datapelangan.py:188-234) stops at daily count/sum aggregates;
-this pack is north-star extension surface, not a port.
+this module is north-star extension surface, not a port.
 """
 
 from __future__ import annotations
@@ -24,9 +54,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_tj_project_spark.harness import register
+from etl_tj_project_spark.operators.classifier import md5_bucket, md5_bucket_sql
+from etl_tj_project_spark.schemas import AMOUNT
 from etl_tj_project_spark.sources.testdata import load_table
 
-PRICE = "decimal(18,2)"
+
+# =========================================================================
+# Association/correlation statistics and interval proration
+# =========================================================================
+
 
 _TOKENS = "regexp_extract_all(lower(text), '[a-z]+', 0)"
 _TOKENS_SQL = "regexp_extract_all(lower(text), '[a-z]+')"
@@ -139,8 +175,8 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", "c_nationkey", "c_acctbal")
         .agg(
             F.coalesce(
-                F.sum(F.col("o_totalprice").cast(PRICE)),
-                F.lit(0).cast(PRICE),
+                F.sum(F.col("o_totalprice").cast(AMOUNT)),
+                F.lit(0).cast(AMOUNT),
             ).alias("total_spend")
         )
     )
@@ -284,7 +320,7 @@ def rebase_index_100(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = o.groupBy(
         "o_orderpriority",
         F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(F.sum(F.col("o_totalprice").cast(PRICE)).cast(PRICE).alias("rev"))
+    ).agg(F.sum(F.col("o_totalprice").cast(AMOUNT)).cast(AMOUNT).alias("rev"))
     w = (
         Window.partitionBy("o_orderpriority")
         .orderBy("mon")
@@ -510,7 +546,7 @@ def interval_prorate_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     d0 = F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")).cast("long")
     iv = o.select(
-        F.col("o_totalprice").cast(PRICE).alias("price"),
+        F.col("o_totalprice").cast(AMOUNT).alias("price"),
         d0.alias("d0"),
         (d0 + F.lit(13)).alias("d1"),
     )
@@ -667,8 +703,8 @@ def running_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     flow = F.when(
         F.col("o_orderstatus") == "F",
-        F.lit(0).cast(PRICE) - F.col("o_totalprice").cast(PRICE),
-    ).otherwise(F.col("o_totalprice").cast(PRICE))
+        F.lit(0).cast(AMOUNT) - F.col("o_totalprice").cast(AMOUNT),
+    ).otherwise(F.col("o_totalprice").cast(AMOUNT))
     cum = F.sum(flow).over(w)
     series = o.select(
         "o_custkey", "o_orderdate", "o_orderkey", cum.alias("cum")
@@ -783,7 +819,7 @@ def churned_users_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 def coverage_set_80pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     pr = li.groupBy("l_suppkey", "l_returnflag").agg(
-        F.sum(F.col("l_extendedprice").cast(PRICE)).alias("rev")
+        F.sum(F.col("l_extendedprice").cast(AMOUNT)).alias("rev")
     )
     wcum = (
         Window.partitionBy("l_returnflag")
@@ -1522,10 +1558,10 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def revenue_bridge_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    zero = F.lit(0).cast(PRICE)
+    zero = F.lit(0).cast(AMOUNT)
     cm = o.groupBy(
         "o_custkey", F.date_trunc("month", "o_orderdate").alias("mon")
-    ).agg(F.sum(F.col("o_totalprice").cast(PRICE)).alias("rev"))
+    ).agg(F.sum(F.col("o_totalprice").cast(AMOUNT)).alias("rev"))
     cur = cm.select("o_custkey", "mon", F.col("rev").alias("cur_rev"))
     prv = cm.select(
         "o_custkey",
@@ -1642,7 +1678,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", "o_orderdate"), F.col("cohort")
     ).cast("long")
     rev = joined.groupBy("cohort", age.alias("age_months")).agg(
-        F.sum(F.col("o_totalprice").cast(PRICE)).alias("rev")
+        F.sum(F.col("o_totalprice").cast(AMOUNT)).alias("rev")
     )
     sizes = firsts.groupBy("cohort").agg(
         F.count(F.lit(1)).cast("long").alias("cohort_users")
@@ -1817,4 +1853,780 @@ def groupwise_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
              * (n * syy - sy * sy).cast("double"),
              F.lit(0.0),
          )).alias("r2"),
+    )
+
+
+# =========================================================================
+# Deterministic sketches: count-min heavy hitters, SQL Bloom filter
+# =========================================================================
+
+
+_CMS_D = 4   # hash rows
+_CMS_W = 64  # buckets per row
+
+
+@register(
+    "cms_heavy_hitters",
+    f"""
+    WITH keys AS (SELECT o_custkey AS k FROM orders),
+    cells AS (
+      SELECT j,
+             {md5_bucket_sql("CAST(j AS VARCHAR) || ':' || CAST(k AS VARCHAR)", _CMS_W)}
+               AS bucket,
+             COUNT(*) AS cell_cnt
+      FROM keys, unnest([0, 1, 2, 3]) AS t(j)
+      GROUP BY 1, 2
+    ),
+    exact AS (SELECT k, COUNT(*) AS exact_cnt FROM keys GROUP BY 1),
+    top10 AS (
+      SELECT k, exact_cnt FROM exact ORDER BY exact_cnt DESC, k LIMIT 10
+    ),
+    probes AS (
+      SELECT k, exact_cnt, j,
+             {md5_bucket_sql("CAST(j AS VARCHAR) || ':' || CAST(k AS VARCHAR)", _CMS_W)}
+               AS bucket
+      FROM top10, unnest([0, 1, 2, 3]) AS t(j)
+    )
+    SELECT p.k AS o_custkey,
+           CAST(p.exact_cnt AS BIGINT) AS exact_cnt,
+           CAST(min(c.cell_cnt) AS BIGINT) AS cms_est,
+           CAST(min(c.cell_cnt) - p.exact_cnt AS BIGINT) AS overcount
+    FROM probes p JOIN cells c USING (j, bucket)
+    GROUP BY p.k, p.exact_cnt
+    """,
+    doc="Count-min sketch (d=4, w=64) on the portable md5 hash — point "
+        "frequency estimates for the top-10 heavy hitters, with the "
+        "overcount surfaced so the one-sided error contract "
+        "(est >= exact, always) is hash-checked data. Deterministic "
+        "hashes make the whole sketch cross-engine identical (HLL is "
+        "not). Build collapses d×N hashed rows to a constant d×w cell "
+        "grid via partial aggregation; the probe joins the 256-cell "
+        "sketch broadcast-side. Mergeable (cell-wise +), so it partial-"
+        "aggregates at 100 TB and is the bounded streaming state for "
+        "heavy-hitter tracking",
+)
+def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    keys = load_table(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("k")
+    )
+    js = F.array(*[F.lit(j) for j in range(_CMS_D)])
+    salted = F.concat(
+        F.col("j").cast("string"), F.lit(":"), F.col("k").cast("string")
+    )
+    hashed = keys.withColumn("j", F.explode(js)).withColumn(
+        "bucket", md5_bucket(salted, _CMS_W)
+    )
+    cells = hashed.groupBy("j", "bucket").agg(F.count(F.lit(1)).alias("cell_cnt"))
+    exact = keys.groupBy("k").agg(F.count(F.lit(1)).alias("exact_cnt"))
+    top10 = exact.orderBy(F.col("exact_cnt").desc(), F.col("k")).limit(10)
+    probes = top10.withColumn("j", F.explode(js)).withColumn(
+        "bucket", md5_bucket(salted, _CMS_W)
+    )
+    est = (
+        probes.join(F.broadcast(cells), ["j", "bucket"])
+        .groupBy("k", "exact_cnt")
+        .agg(F.min("cell_cnt").alias("cms_est"))
+    )
+    return est.select(
+        F.col("k").alias("o_custkey"),
+        F.col("exact_cnt").cast("long").alias("exact_cnt"),
+        F.col("cms_est").cast("long").alias("cms_est"),
+        (F.col("cms_est") - F.col("exact_cnt")).cast("long").alias("overcount"),
+    )
+
+
+_BLOOM_M = 512  # bits
+_BLOOM_K = 3    # hash functions
+
+
+@register(
+    "bloom_filter_membership",
+    f"""
+    WITH build AS (SELECT p_partkey AS k FROM part WHERE p_size <= 5),
+    bits AS (
+      SELECT DISTINCT
+             {md5_bucket_sql("CAST(j AS VARCHAR) || '#' || CAST(k AS VARCHAR)", _BLOOM_M)}
+               AS pos
+      FROM build, unnest([0, 1, 2]) AS t(j)
+    ),
+    probe AS (
+      SELECT DISTINCT l_partkey AS k FROM lineitem WHERE l_quantity >= 45
+    ),
+    checked AS (
+      SELECT p.k,
+             min(CASE WHEN b.pos IS NULL THEN 0 ELSE 1 END) AS all_set
+      FROM (
+        SELECT k, j,
+               {md5_bucket_sql("CAST(j AS VARCHAR) || '#' || CAST(k AS VARCHAR)", _BLOOM_M)}
+                 AS pos
+        FROM probe, unnest([0, 1, 2]) AS t(j)
+      ) p
+      LEFT JOIN bits b USING (pos)
+      GROUP BY p.k
+    ),
+    truth AS (
+      SELECT c.k, c.all_set,
+             CASE WHEN bu.k IS NULL THEN 0 ELSE 1 END AS is_member
+      FROM checked c LEFT JOIN (SELECT DISTINCT k FROM build) bu USING (k)
+    )
+    SELECT CAST((SELECT COUNT(*) FROM build) AS BIGINT) AS n_build,
+           CAST((SELECT COUNT(*) FROM bits) AS BIGINT) AS n_bits_set,
+           CAST(COUNT(*) AS BIGINT) AS n_probes,
+           CAST(SUM(all_set) AS BIGINT) AS n_bloom_hits,
+           CAST(SUM(is_member) AS BIGINT) AS n_true_members,
+           CAST(SUM(CASE WHEN all_set = 1 AND is_member = 0 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_false_positives,
+           CAST(SUM(CASE WHEN all_set = 0 AND is_member = 1 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_false_negatives
+    FROM truth
+    """,
+    doc="Bloom filter as portable SQL data: k=3 md5-derived bit "
+        "positions in an m=512 set built from one table's keys, probed "
+        "by another's — the manual, REUSABLE form of runtime bloom-join "
+        "injection, with the contract surfaced as hash-checked columns: "
+        "n_false_negatives is structurally 0 (a Bloom filter never "
+        "misses a member), n_false_positives is whatever the load "
+        "factor implies and both engines must agree exactly because the "
+        "hashes are deterministic. The bit set is a bounded DISTINCT "
+        "(≤m rows) broadcast to the probe side; at 100 TB the build is "
+        "a map-side-combined shuffle of k×|build| rows capped at m "
+        "cells",
+)
+def bloom_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
+    part = load_table(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    build = part.filter(F.col("p_size") <= 5).select(F.col("p_partkey").alias("k"))
+    js = F.array(*[F.lit(j) for j in range(_BLOOM_K)])
+    salted = F.concat(
+        F.col("j").cast("string"), F.lit("#"), F.col("k").cast("string")
+    )
+    bits = (
+        build.withColumn("j", F.explode(js))
+        .select(md5_bucket(salted, _BLOOM_M).alias("pos"))
+        .distinct()
+    )
+    probe = (
+        li.filter(F.col("l_quantity") >= 45)
+        .select(F.col("l_partkey").alias("k"))
+        .distinct()
+    )
+    checked = (
+        probe.withColumn("j", F.explode(js))
+        .withColumn("pos", md5_bucket(salted, _BLOOM_M))
+        .join(F.broadcast(bits.withColumn("hit", F.lit(1))), "pos", "left")
+        .groupBy("k")
+        .agg(F.min(F.coalesce(F.col("hit"), F.lit(0))).alias("all_set"))
+    )
+    truth = checked.join(
+        F.broadcast(build.distinct().withColumn("is_member", F.lit(1))),
+        "k",
+        "left",
+    ).withColumn("is_member", F.coalesce(F.col("is_member"), F.lit(0)))
+    # Scalar side-counts stay in-plan (broadcast one-row aggregates), so
+    # the whole query is a single job with no driver-side actions.
+    n_build = build.agg(F.count(F.lit(1)).cast("long").alias("n_build"))
+    n_bits = bits.agg(F.count(F.lit(1)).cast("long").alias("n_bits_set"))
+    summary = truth.agg(
+        F.count(F.lit(1)).cast("long").alias("n_probes"),
+        F.sum("all_set").cast("long").alias("n_bloom_hits"),
+        F.sum("is_member").cast("long").alias("n_true_members"),
+        F.sum(
+            ((F.col("all_set") == 1) & (F.col("is_member") == 0)).cast("int")
+        ).cast("long").alias("n_false_positives"),
+        F.sum(
+            ((F.col("all_set") == 0) & (F.col("is_member") == 1)).cast("int")
+        ).cast("long").alias("n_false_negatives"),
+    )
+    return (
+        summary.crossJoin(F.broadcast(n_build))
+        .crossJoin(F.broadcast(n_bits))
+        .select(
+            "n_build",
+            "n_bits_set",
+            "n_probes",
+            "n_bloom_hits",
+            "n_true_members",
+            "n_false_positives",
+            "n_false_negatives",
+        )
+    )
+
+
+# =========================================================================
+# Time series: interpolation gap-fill, marker-reset running sums,
+# rolling covariance
+# =========================================================================
+
+
+@register(
+    "time_bucket_interpolate",
+    """
+    WITH sparse AS (
+      SELECT CAST(o_orderdate AS DATE) AS d,
+             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
+               AS revenue
+      FROM orders WHERE o_orderpriority = '1-URGENT'
+      GROUP BY CAST(o_orderdate AS DATE)
+    ), bounds AS (SELECT min(d) AS mind, max(d) AS maxd FROM sparse),
+    spine AS (
+      SELECT CAST(unnest(generate_series(mind, maxd, INTERVAL 1 DAY)) AS DATE)
+        AS d
+      FROM bounds
+    ), joined AS (
+      SELECT s.d, sp.revenue FROM spine s LEFT JOIN sparse sp ON sp.d = s.d
+    ), anchored AS (
+      SELECT d, revenue,
+             last_value(revenue IGNORE NULLS) OVER wp AS prev_v,
+             last_value(CASE WHEN revenue IS NOT NULL THEN d END IGNORE NULLS)
+               OVER wp AS prev_d,
+             first_value(revenue IGNORE NULLS) OVER wn AS next_v,
+             first_value(CASE WHEN revenue IS NOT NULL THEN d END IGNORE NULLS)
+               OVER wn AS next_d
+      FROM joined
+      WINDOW wp AS (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING
+                    AND CURRENT ROW),
+             wn AS (ORDER BY d ROWS BETWEEN CURRENT ROW
+                    AND UNBOUNDED FOLLOWING)
+    )
+    SELECT d, revenue,
+           CASE
+             WHEN revenue IS NOT NULL THEN CAST(revenue AS DOUBLE)
+             WHEN prev_v IS NULL OR next_v IS NULL THEN NULL
+             ELSE (CAST(prev_v AS DOUBLE) * (next_d - d)
+                   + CAST(next_v AS DOUBLE) * (d - prev_d))
+                  / (next_d - prev_d)
+           END AS revenue_interp
+    FROM anchored
+    """,
+    doc="Linear-interpolation gap fill (the time_bucket_gapfill / "
+        "interpolate operator of timeseries stores): dense spine over a "
+        "SPARSE daily series, each missing day filled from its "
+        "bracketing known points weighted by day distance. Forward-fill "
+        "(date_spine_gap_fill) repeats stale values; interpolation is "
+        "what rate-like metrics need. Aggregate-first: windows run over "
+        "|days| rows. The fill is one IEEE division of exactly-"
+        "representable decimal-scaled operands — deterministic in both "
+        "engines, so the hash check covers the interpolated values too; "
+        "edge days with no bracket on one side stay NULL",
+)
+def time_bucket_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders")
+    sparse = (
+        o.filter(F.col("o_orderpriority") == "1-URGENT")
+        .groupBy(F.col("o_orderdate").cast("date").alias("d"))
+        .agg(F.sum(F.col("o_totalprice").cast(AMOUNT)).cast(AMOUNT).alias("revenue"))
+    )
+    bounds = sparse.agg(F.min("d").alias("mind"), F.max("d").alias("maxd"))
+    spine = bounds.select(F.explode(F.sequence("mind", "maxd")).alias("d"))
+    joined = spine.join(sparse, "d", "left")
+    wp = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
+    wn = Window.orderBy("d").rowsBetween(0, Window.unboundedFollowing)
+    known_d = F.when(F.col("revenue").isNotNull(), F.col("d"))
+    anchored = joined.select(
+        "d",
+        "revenue",
+        F.last("revenue", ignorenulls=True).over(wp).alias("prev_v"),
+        F.last(known_d, ignorenulls=True).over(wp).alias("prev_d"),
+        F.first("revenue", ignorenulls=True).over(wn).alias("next_v"),
+        F.first(known_d, ignorenulls=True).over(wn).alias("next_d"),
+    )
+    interp = (
+        F.col("prev_v").cast("double") * F.datediff("next_d", "d")
+        + F.col("next_v").cast("double") * F.datediff("d", "prev_d")
+    ) / F.datediff("next_d", "prev_d")
+    return anchored.select(
+        "d",
+        "revenue",
+        F.when(F.col("revenue").isNotNull(), F.col("revenue").cast("double"))
+        .when(F.col("prev_v").isNull() | F.col("next_v").isNull(), F.lit(None))
+        .otherwise(interp)
+        .alias("revenue_interp"),
+    )
+
+
+@register(
+    "running_sum_reset_on_marker",
+    """
+    WITH seg AS (
+      SELECT event_id, user_id, ts, event_type,
+             CAST(value AS DECIMAL(18,2)) AS v,
+             COALESCE(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+               OVER (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS seg
+      FROM events
+    )
+    SELECT event_id, user_id, CAST(seg AS BIGINT) AS seg,
+           CAST(SUM(v) OVER (PARTITION BY user_id, seg
+                             ORDER BY ts, event_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                AS DECIMAL(18,2)) AS run_val
+    FROM seg
+    """,
+    doc="Running sum that RESETS at marker events (accumulated activity "
+        "value since the user's last purchase) — the cursor-style 'reset "
+        "accumulator' re-expressed set-based: a strictly-preceding "
+        "marker count assigns each row a segment id, then an ordinary "
+        "running sum partitioned by (user, segment). The marker row "
+        "closes its own segment; the next row starts at zero. Two "
+        "window passes over the SAME (user, ts) sort order, so Spark "
+        "plans one exchange + one sort for both",
+)
+def running_sum_reset_on_marker(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    w_mark = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    seg = ev.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.col("value").cast(AMOUNT).alias("v"),
+        F.coalesce(
+            F.sum((F.col("event_type") == "purchase").cast("int")).over(w_mark),
+            F.lit(0),
+        ).alias("seg"),
+    )
+    w_run = (
+        Window.partitionBy("user_id", "seg")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return seg.select(
+        "event_id",
+        "user_id",
+        F.col("seg").cast("long").alias("seg"),
+        F.sum("v").over(w_run).cast(AMOUNT).alias("run_val"),
+    )
+
+
+@register(
+    "rolling_cov_manual",
+    """
+    WITH t AS (
+      SELECT l_suppkey, l_orderkey, l_linenumber,
+             CAST(l_quantity AS DECIMAL(9,2))       AS x,
+             CAST(l_extendedprice AS DECIMAL(12,2)) AS y,
+             CAST(CAST(l_quantity AS DECIMAL(9,2))
+                  * CAST(l_extendedprice AS DECIMAL(12,2))
+                  AS DECIMAL(18,4)) AS xy
+      FROM lineitem
+    ), framed AS (
+      SELECT l_suppkey, l_orderkey, l_linenumber,
+             COUNT(*) OVER w                              AS n,
+             CAST(SUM(x) OVER w AS DECIMAL(12,2))         AS sx,
+             CAST(SUM(y) OVER w AS DECIMAL(15,2))         AS sy,
+             CAST(SUM(xy) OVER w AS DECIMAL(21,4))        AS sxy
+      FROM t
+      WINDOW w AS (PARTITION BY l_suppkey
+                   ORDER BY l_orderkey, l_linenumber, x, y
+                   ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+    )
+    SELECT l_suppkey, l_orderkey, l_linenumber,
+           CAST(n AS BIGINT) AS n,
+           CAST(CAST(n AS DECIMAL(3,0)) * sxy - sx * sy AS DECIMAL(27,4))
+             AS cov_num,
+           CAST(CAST(CAST(n AS DECIMAL(3,0)) * sxy - sx * sy AS DECIMAL(27,4))
+                AS DOUBLE) / (n * n) AS cov_biased
+    FROM framed
+    """,
+    doc="Rolling covariance over a trailing 7-row frame per supplier — "
+        "the pairwise-stats twin of rolling_zscore_anomaly. Native "
+        "covar_samp over a sliding frame hits FP accumulation-order "
+        "divergence between engines, so the moment sums (Σx, Σy, Σxy) "
+        "stay DECIMAL inside the frame and combine as "
+        "n·Σxy − Σx·Σy, exact at bounded precision; the final biased "
+        "covariance is one IEEE division by n². Frame ordering: this "
+        "synthetic lineitem has DUPLICATE (l_orderkey, l_linenumber) "
+        "pairs within a supplier at sf0.01+, so the measures (x, y) "
+        "join the sort key as final tie-breaks — remaining ties are "
+        "full duplicates whose exchange cannot change any frame sum",
+)
+def rolling_cov_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    x = F.col("l_quantity").cast("decimal(9,2)")
+    y = F.col("l_extendedprice").cast("decimal(12,2)")
+    t = li.select(
+        "l_suppkey",
+        "l_orderkey",
+        "l_linenumber",
+        x.alias("x"),
+        y.alias("y"),
+        (x * y).cast("decimal(18,4)").alias("xy"),
+    )
+    w = (
+        Window.partitionBy("l_suppkey")
+        .orderBy("l_orderkey", "l_linenumber", "x", "y")
+        .rowsBetween(-6, Window.currentRow)
+    )
+    framed = t.select(
+        "l_suppkey",
+        "l_orderkey",
+        "l_linenumber",
+        F.count(F.lit(1)).over(w).alias("n"),
+        F.sum("x").over(w).cast("decimal(12,2)").alias("sx"),
+        F.sum("y").over(w).cast("decimal(15,2)").alias("sy"),
+        F.sum("xy").over(w).cast("decimal(21,4)").alias("sxy"),
+    )
+    cov_num = (
+        F.col("n").cast("decimal(3,0)") * F.col("sxy")
+        - F.col("sx") * F.col("sy")
+    ).cast("decimal(27,4)")
+    return framed.select(
+        "l_suppkey",
+        "l_orderkey",
+        "l_linenumber",
+        F.col("n").cast("long").alias("n"),
+        cov_num.alias("cov_num"),
+        (cov_num.cast("double") / (F.col("n") * F.col("n"))).alias("cov_biased"),
+    )
+
+
+# =========================================================================
+# Search and ranking: inverted index, positional phrase search,
+# Pareto frontier, Gini-impurity diversity
+# =========================================================================
+
+
+@register(
+    "inverted_index_postings",
+    f"""
+    WITH toks AS (
+      SELECT doc_id, unnest({_TOKENS_SQL}) AS term FROM documents
+    )
+    SELECT term,
+           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df,
+           CAST(COUNT(*) AS BIGINT) AS tf,
+           array_to_string(
+             list_transform(list_sort(list(DISTINCT doc_id)),
+                            x -> CAST(x AS VARCHAR)), ',') AS postings_csv
+    FROM toks GROUP BY term HAVING COUNT(DISTINCT doc_id) >= 25
+    """,
+    doc="Inverted-index build: term → (document frequency, term "
+        "frequency, sorted posting list) — the search-engine core "
+        "structure, one token shuffle keyed by term. Postings surface "
+        "as a sorted CSV because collection order is partition-"
+        "dependent (the array_agg_sorted rule); at 100 TB postings "
+        "for head terms are block-compressed per shard rather than "
+        "concatenated, but the build shuffle is identical. df >= 25 "
+        "keeps the checked slice to the head of the vocabulary",
+)
+def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select("doc_id", F.explode(F.expr(_TOKENS)).alias("term"))
+    return (
+        toks.groupBy("term")
+        .agg(
+            F.count_distinct("doc_id").cast("long").alias("df"),
+            F.count(F.lit(1)).cast("long").alias("tf"),
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_set("doc_id")),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
+            ).alias("postings_csv"),
+        )
+        .filter(F.col("df") >= 25)
+    )
+
+
+@register(
+    "phrase_search_positional",
+    f"""
+    WITH pos AS (
+      SELECT doc_id,
+             unnest({_TOKENS_SQL}) AS term,
+             unnest(range(1, len({_TOKENS_SQL}) + 1)) AS p
+      FROM documents
+    ),
+    bigrams AS (
+      SELECT a.term AS w1, b.term AS w2, COUNT(*) AS n
+      FROM pos a JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
+      GROUP BY a.term, b.term
+    ),
+    phrase AS (
+      SELECT w1, w2 FROM bigrams ORDER BY n DESC, w1, w2 LIMIT 1
+    )
+    SELECT a.doc_id, any_value(ph.w1) AS w1, any_value(ph.w2) AS w2,
+           CAST(COUNT(*) AS BIGINT) AS n_occurrences
+    FROM pos a
+    JOIN phrase ph ON a.term = ph.w1
+    JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1 AND b.term = ph.w2
+    GROUP BY a.doc_id
+    """,
+    doc="Positional phrase search through the index, not a string scan: "
+        "tokens keep their positions, the phrase (chosen in-query as "
+        "the corpus's top bigram, deterministic tie-break) matches via "
+        "a (doc, position+1) self-join — the adjacency-join formulation "
+        "every positional inverted index uses. Spark plans the phrase "
+        "as a one-row broadcast against the position table; at 100 TB "
+        "the position table is the stored index, bucketed by term, and "
+        "the join touches only the two terms' postings",
+)
+def phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents")
+    pos = d.select(
+        "doc_id",
+        F.posexplode(F.expr(_TOKENS)).alias("p0", "term"),
+    ).select("doc_id", (F.col("p0") + 1).alias("p"), "term")
+    adj = pos.alias("a").join(
+        pos.alias("b"),
+        (F.col("a.doc_id") == F.col("b.doc_id"))
+        & (F.col("b.p") == F.col("a.p") + 1),
+    )
+    bigrams = adj.groupBy(
+        F.col("a.term").alias("w1"), F.col("b.term").alias("w2")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    phrase = bigrams.orderBy(F.col("n").desc(), "w1", "w2").limit(1).select(
+        "w1", "w2"
+    )
+    hits = (
+        pos.alias("a")
+        .join(F.broadcast(phrase.alias("ph")), F.col("a.term") == F.col("ph.w1"))
+        .join(
+            pos.alias("b"),
+            (F.col("b.doc_id") == F.col("a.doc_id"))
+            & (F.col("b.p") == F.col("a.p") + 1)
+            & (F.col("b.term") == F.col("ph.w2")),
+        )
+    )
+    return hits.groupBy(F.col("a.doc_id").alias("doc_id")).agg(
+        F.any_value(F.col("ph.w1")).alias("w1"),
+        F.any_value(F.col("ph.w2")).alias("w2"),
+        F.count(F.lit(1)).cast("long").alias("n_occurrences"),
+    )
+
+
+@register(
+    "pareto_frontier_2d",
+    """
+    WITH pts AS (
+      SELECT DISTINCT CAST(p_retailprice AS DECIMAL(12,2)) AS price, p_size
+      FROM part
+    ),
+    ranked AS (
+      SELECT price, p_size,
+             MIN(p_size) OVER (ORDER BY price, p_size
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                               AND 1 PRECEDING) AS best_size_so_far
+      FROM pts
+    )
+    SELECT CAST(price AS DOUBLE) AS price, CAST(p_size AS INTEGER) AS p_size
+    FROM ranked
+    WHERE best_size_so_far IS NULL OR p_size < best_size_so_far
+    """,
+    doc="Pareto frontier / skyline (minimize price AND size): the 2-D "
+        "case collapses to sort-by-x + running-min-of-y — a point "
+        "survives iff it strictly improves the best y seen so far, one "
+        "window pass instead of the quadratic NOT-EXISTS dominance "
+        "scan. Distinct pairs first so duplicate points can't self-"
+        "dominate. The window is over DISTINCT (price, size) pairs — "
+        "bounded by value-domain size, not table size, so the "
+        "unpartitioned frame is safe at scale",
+)
+def pareto_frontier_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    p = load_table(spark, sf_dir, "part")
+    pts = p.select(
+        F.col("p_retailprice").cast("decimal(12,2)").alias("price"), "p_size"
+    ).distinct()
+    w = Window.orderBy("price", "p_size").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    ranked = pts.withColumn("best_size_so_far", F.min("p_size").over(w))
+    return ranked.filter(
+        F.col("best_size_so_far").isNull()
+        | (F.col("p_size") < F.col("best_size_so_far"))
+    ).select(
+        F.col("price").cast("double").alias("price"),
+        F.col("p_size").cast("int").alias("p_size"),
+    )
+
+
+@register(
+    "gini_impurity_by_group",
+    """
+    WITH cnt AS (
+      SELECT user_id, event_type, COUNT(*) AS c
+      FROM events GROUP BY user_id, event_type
+    ),
+    agg AS (
+      SELECT user_id,
+             SUM(c) AS total,
+             SUM(c * c) AS sum_sq,
+             COUNT(*) AS n_types
+      FROM cnt GROUP BY user_id
+    )
+    SELECT user_id,
+           CAST(n_types AS BIGINT) AS n_types,
+           CAST(total * total - sum_sq AS BIGINT) AS gini_num,
+           CAST(total * total AS BIGINT) AS gini_den,
+           CAST(total * total - sum_sq AS DOUBLE) / (total * total)
+             AS gini_impurity
+    FROM agg
+    """,
+    doc="Gini impurity (1 - sum p_i^2) of each user's event-type mix — "
+        "the diversity/concentration metric that needs NO logarithm, "
+        "unlike Shannon entropy whose libm ln() is not bit-portable "
+        "across engines. Kept exact-rational (numerator, denominator "
+        "as BIGINT) with one IEEE division at the end, so the hash "
+        "check covers the ratio too. Two aggregations, both keyed on "
+        "user — the second collapses type-level counts, so the heavy "
+        "shuffle is the first and only fact-sized one",
+)
+def gini_impurity_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    cnt = ev.groupBy("user_id", "event_type").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    agg = cnt.groupBy("user_id").agg(
+        F.sum("c").alias("total"),
+        F.sum(F.col("c") * F.col("c")).alias("sum_sq"),
+        F.count(F.lit(1)).alias("n_types"),
+    )
+    num = F.col("total") * F.col("total") - F.col("sum_sq")
+    den = F.col("total") * F.col("total")
+    return agg.select(
+        "user_id",
+        F.col("n_types").cast("long").alias("n_types"),
+        num.cast("long").alias("gini_num"),
+        den.cast("long").alias("gini_den"),
+        (num.cast("double") / den).alias("gini_impurity"),
+    )
+
+
+# =========================================================================
+# CUSUM changepoint over daily event counts (window-only)
+# =========================================================================
+
+@register(
+    "cusum_changepoint_daily",
+    """
+    WITH d AS (
+      SELECT event_type, CAST(ts AS DATE) AS day,
+             CAST(count(*) AS BIGINT) AS cnt
+      FROM events GROUP BY 1, 2
+    ), m AS (
+      SELECT event_type,
+             CAST(sum(cnt) * 1000 // count(*) AS BIGINT) AS mean_milli
+      FROM d GROUP BY 1
+    ), x AS (
+      SELECT d.event_type, d.day, d.cnt, m.mean_milli,
+             d.cnt * 1000 - m.mean_milli - (m.mean_milli // 10) AS dev
+      FROM d JOIN m USING (event_type)
+    ), r AS (
+      SELECT event_type, day, cnt, mean_milli,
+             sum(dev) OVER (PARTITION BY event_type ORDER BY day
+                            ROWS UNBOUNDED PRECEDING) AS run_sum
+      FROM x
+    )
+    SELECT event_type, day, cnt,
+           CAST(run_sum - least(
+                  min(run_sum) OVER (PARTITION BY event_type ORDER BY day
+                                     ROWS UNBOUNDED PRECEDING), 0)
+                AS BIGINT) AS cusum_milli,
+           CAST(CASE WHEN run_sum - least(
+                  min(run_sum) OVER (PARTITION BY event_type ORDER BY day
+                                     ROWS UNBOUNDED PRECEDING), 0)
+                  > mean_milli THEN 1 ELSE 0 END AS BIGINT)
+             AS changepoint_flag
+    FROM r
+    """,
+    doc="One-sided CUSUM changepoint statistic over per-type daily "
+        "event counts, slack k = mean/10, flag when the statistic "
+        "exceeds the per-type mean. The textbook recursion "
+        "S_t = max(0, S_{t-1} + x_t) looks inherently sequential, but "
+        "S_t == R_t - min(0, min_{k<=t} R_k) (R = plain running sum; "
+        "induction: max(0, R_{t-1} - m_{t-1} + x_t) = R_t - "
+        "min(m_{t-1}, R_t) = R_t - m_t), so it is TWO stacked window "
+        "functions — each a partitioned sort, fully distributed, no "
+        "UDF, no iteration. All arithmetic in exact milli-integers "
+        "(mean via BIGINT div), so both engines agree bit-for-bit",
+)
+def cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    d = ev.groupBy(
+        "event_type", F.col("ts").cast("date").alias("day")
+    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    m = d.groupBy("event_type").agg(
+        F.expr("sum(cnt) * 1000 div count(*)").cast("long").alias("mean_milli")
+    )
+    x = d.join(m, "event_type").withColumn(
+        "dev",
+        F.col("cnt") * 1000 - F.col("mean_milli")
+        - F.expr("mean_milli div 10"),
+    )
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    r = x.withColumn("run_sum", F.sum("dev").over(w))
+    cusum = F.col("run_sum") - F.least(F.min("run_sum").over(w), F.lit(0))
+    return r.select(
+        "event_type",
+        "day",
+        "cnt",
+        cusum.cast("long").alias("cusum_milli"),
+        F.when(cusum > F.col("mean_milli"), F.lit(1))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("changepoint_flag"),
+    )
+
+
+# =========================================================================
+# k-anonymity audit (privacy curation)
+# =========================================================================
+
+_KANON_K = 5
+
+
+@register(
+    "k_anonymity_audit",
+    f"""
+    WITH g AS (
+      SELECT c_nationkey, c_mktsegment,
+             CAST(floor(c_acctbal / 1000) AS BIGINT) AS bal_band,
+             count(*) AS grp_sz
+      FROM customer
+      GROUP BY 1, 2, 3
+    )
+    SELECT CAST(grp_sz AS BIGINT) AS group_size,
+           CAST(count(*) AS BIGINT) AS n_groups,
+           CAST(sum(grp_sz) AS BIGINT) AS n_rows,
+           CAST(CASE WHEN grp_sz < {_KANON_K} THEN 1 ELSE 0 END AS BIGINT)
+             AS violates_k
+    FROM g GROUP BY grp_sz
+    """,
+    doc=f"k-anonymity audit over the quasi-identifier tuple (nation, "
+        "market segment, coarse balance band): the group-size histogram "
+        f"with a k={_KANON_K} violation flag — the release-readiness "
+        "check a privacy-preserving data publication runs AFTER "
+        "corpus_pii_redact's direct-identifier pass (quasi-identifiers "
+        "re-identify via linkage even with PII gone; groups smaller "
+        "than k must be suppressed or generalized before release). One "
+        "group-by over the quasi-identifier tuple + one histogram "
+        "aggregate — two narrow shuffles at any scale. The balance "
+        "band floor(acctbal/1000) is the generalization step itself: "
+        "raw balances are near-unique (every group violates), banded "
+        "ones form meaningful cohorts — the entry's distribution "
+        "exhibits both regimes",
+)
+def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = load_table(spark, sf_dir, "customer")
+    g = c.groupBy(
+        "c_nationkey",
+        "c_mktsegment",
+        F.floor(F.col("c_acctbal") / 1000).cast("long").alias("bal_band"),
+    ).agg(F.count(F.lit(1)).alias("grp_sz"))
+    return g.groupBy(F.col("grp_sz").cast("long").alias("group_size")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_groups"),
+        F.sum("grp_sz").cast("long").alias("n_rows"),
+        F.when(F.col("group_size") < _KANON_K, F.lit(1))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("violates_k"),
     )

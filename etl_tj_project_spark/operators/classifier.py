@@ -1,7 +1,7 @@
 """fastText-style linear quality classifier — INFERENCE over a corpus.
 
 The model-based document filter every modern LLM data pipeline runs
-after the rule-based one (harness_analytics.corpus_quality_filter is
+after the rule-based one (harness_relational.corpus_quality_filter is
 the rule-based sibling): hashed n-gram features -> fixed integer weight
 table -> per-document dot product -> mean-score threshold. This module
 is the inference engine; the weight table is an input (a real pipeline
@@ -14,7 +14,7 @@ Everything is native Column expressions — no Python in the data path:
   built with split/transform/concat inside the JVM;
 * hashing trick: feature -> bucket via the first 8 hex chars of md5,
   mod n_buckets — the PORTABLE hash both engines compute identically
-  (same idiom as harness_sketches), so collisions (the defining
+  (the idiom of the harness_stats sketches), so collisions (the defining
   property of hashed features) are deterministic and the whole
   inference is oracle-hash-checkable;
 * weight lookup: broadcast join on the bucket id (the weight table is
@@ -46,10 +46,27 @@ N_BUCKETS = 1024
 SCORE_SCALE = 100
 THRESHOLD = 12
 
+# The shipped "model": integer marker weights over the corpus
+# vocabulary (a real pipeline trains these offline; inference shape is
+# what the classifier registry entries pin). Positive = content-bearing
+# engine terms, negative = filler; bigram features catch degenerate
+# repetition. (Chosen collision-free under the md5 bucket hash — "join"
+# and "a a" collide with "the" and "a" at N_BUCKETS=1024, so "group"
+# and "a the" stand in; injectivity is pinned in tests/test_classifier.py.)
+DEFAULT_WEIGHTS: list[tuple[str, int]] = [
+    ("spark", 40), ("data", 30), ("query", 30), ("vector", 25),
+    ("window", 20), ("stream", 20), ("group", 15), ("agg", 15),
+    ("merge", 15), ("sort", 10), ("hash", 10), ("column", 10),
+    ("slow", -40), ("small", -25), ("big", -25), ("the", -20),
+    ("a", -30), ("row", -10), ("line", -10),
+    ("spark data", 50), ("fast fast", 30), ("slow slow", -60),
+    ("table table", -30), ("the the", -40), ("a the", -50),
+]
+
 
 def md5_bucket(col: F.Column, mod: int = N_BUCKETS) -> F.Column:
     """First 8 md5 hex chars as non-negative int64 mod ``mod`` — the
-    portable cross-engine hash (harness_sketches' idiom)."""
+    portable cross-engine hash, shared by the harness_stats sketches."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % mod
 
 

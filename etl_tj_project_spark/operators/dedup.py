@@ -1379,7 +1379,7 @@ def _set_reprs_int(toks_i: DataFrame, n_vocab: int):
     ``inter(a, b)`` = a BIGINT Column sizing the exact intersection of
     two ``__rep`` values. Bitset tier when the whole dictionary fits
     ``_VERIFY_BITSET_MAX_TERMS`` bits, int arrays otherwise (both
-    exact; A/B'd in tools/probe_r18_exp1.py)."""
+    exact; A/B'd in OPTIMIZATION_r18.md's representation experiment)."""
     if n_vocab <= _VERIFY_BITSET_MAX_TERMS:
         nwords = max(1, (n_vocab + 63) // 64)
         reps = toks_i.groupBy("__id").agg(

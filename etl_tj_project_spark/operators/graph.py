@@ -178,7 +178,7 @@ def lcc_second_pass_delta(
     Empty when no residual structure clears the threshold. Pass
     ``pairs`` to reuse a precomputed survivor residual candidate table
     (the registered entry feeds the shared once-per-corpus artifact,
-    harness_r12.shared_residual_pairs); left None, the table is built
+    harness_dedup.shared_residual_pairs); left None, the table is built
     from ``docs``/``manifest`` — the path arbitrary-frame callers (the
     strain runner, the idempotency test) use.
 

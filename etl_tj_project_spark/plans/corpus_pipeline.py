@@ -60,7 +60,7 @@ def build_training_corpus(
     family manifest is published as a fourth snapshot table
     (``dedup_manifest``) — it IS the dedup decision, and downstream
     jobs read it instead of recomputing LSH + CC (the
-    shared-artifact contract, harness_r12). Left ``None`` (default),
+    shared-artifact contract, harness_dedup). Left ``None`` (default),
     near dedup stays the greedy Jaccard-verified drop and no manifest
     table is published.
     """

@@ -224,7 +224,7 @@ def _update_user_distinct(
 def user_distinct_types_stream(events: DataFrame) -> DataFrame:
     """Per-user running COUNT(DISTINCT event_type) across micro-batches —
     the streaming twin of the batch `running_distinct_count` rewrite
-    (harness_fnpacks4) collapsed to its final per-user value.
+    (harness_functions) collapsed to its final per-user value.
 
     State per user is the SET of seen types, stored as a sorted CSV
     string — O(|type domain|) per key, fine for enum-like domains

@@ -104,7 +104,7 @@ def test_bpe_encode_corpus_entry_fixed_table(spark):
     """The registry entry's fixed-table encode: token totals conserve
     the corpus letter mass (every letter lands in exactly one token),
     and the fixed merges actually fire (merged tokens present)."""
-    from etl_tj_project_spark.harness_llmdata2 import (
+    from etl_tj_project_spark.harness_curation import (
         BPE_FIXED_MERGES,
         bpe_encode_corpus,
     )

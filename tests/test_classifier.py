@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_tj_project_spark.harness_llmdata import _CLF_WEIGHTS
+from etl_tj_project_spark.operators.classifier import DEFAULT_WEIGHTS as _CLF_WEIGHTS
 from etl_tj_project_spark.operators import classifier as clf
 
 

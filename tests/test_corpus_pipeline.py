@@ -94,7 +94,7 @@ def test_pipeline_with_boilerplate_and_classifier_stages(spark, tmp_path):
     shared header must also not glue distinct docs into near-dups);
     (2) a junk doc that passes the RULE-based filters must be dropped
     by the MODEL-based classifier stage."""
-    from etl_tj_project_spark.harness_llmdata import _CLF_WEIGHTS
+    from etl_tj_project_spark.operators.classifier import DEFAULT_WEIGHTS as _CLF_WEIGHTS
 
     header = (
         "shared banner chunk repeated on every page of this site "
@@ -156,7 +156,7 @@ def test_pipeline_with_lcc_second_pass_merges_template_families(
     canonical per family, (3) document mass is conserved through the
     merge, (4) a full pipeline re-run is idempotent — version 2
     publishes an identical manifest and corpus."""
-    from etl_tj_project_spark.harness_r16 import LCC_MERGE_THRESHOLD_MILLI
+    from etl_tj_project_spark.harness_dedup import LCC_MERGE_THRESHOLD_MILLI
     from etl_tj_project_spark.operators.corpus import (
         QualityThresholds,
         prepare_corpus_canonical,

@@ -14,8 +14,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_tj_project_spark import strain
-from etl_tj_project_spark.harness_r12 import dedup_cluster_canonicalize
-from etl_tj_project_spark.harness_r13 import (
+from etl_tj_project_spark.harness_dedup import (
+    dedup_cluster_canonicalize,
     dedup_containment_canonical,
     stream_dedup_watermark,
 )

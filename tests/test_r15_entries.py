@@ -14,8 +14,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_tj_project_spark import strain
-from etl_tj_project_spark.harness_r12 import dedup_cluster_canonicalize
-from etl_tj_project_spark.harness_r15 import graph_triangle_count_canonical
+from etl_tj_project_spark.harness_dedup import (
+    dedup_cluster_canonicalize,
+    graph_triangle_count_canonical,
+)
 from etl_tj_project_spark.operators import dedup as dd
 from etl_tj_project_spark.operators.graph import triangle_count_oriented
 from etl_tj_project_spark.sources.testdata import load_table
@@ -122,7 +124,7 @@ def test_residual_lcc_consistent_with_triangle_entry(spark):
     bound 2*tri(v) <= deg(v)*(deg(v)-1) row-wise; (3) non-vacuous —
     some node has a strictly positive, strictly sub-1000 coefficient
     so the statistic genuinely discriminates."""
-    from etl_tj_project_spark.harness_r15 import (
+    from etl_tj_project_spark.harness_dedup import (
         graph_residual_clustering_coefficient,
     )
 

@@ -12,10 +12,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_tj_project_spark.harness_r12 import shared_family_manifest
-from etl_tj_project_spark.harness_r16 import (
+from etl_tj_project_spark.harness_dedup import (
     LCC_MERGE_THRESHOLD_MILLI,
     dedup_lcc_second_pass,
+    shared_family_manifest,
 )
 from etl_tj_project_spark.operators.graph import (
     apply_lcc_second_pass,
@@ -154,7 +154,7 @@ def test_lcc_second_pass_merges_only_high_lcc_nodes(spark):
     the residual LCC entry's own output (degree >= 2, lcc_milli >=
     600) — the pass may merge a SUBSET of high-lcc nodes (those with
     high-high edges), never a node below the bar."""
-    from etl_tj_project_spark.harness_r15 import (
+    from etl_tj_project_spark.harness_dedup import (
         graph_residual_clustering_coefficient,
     )
 
@@ -220,7 +220,7 @@ def test_shared_artifacts_never_serve_stale_data(spark, tmp_path):
     serve the previous corpus's artifact."""
     import shutil
 
-    from etl_tj_project_spark.harness_r12 import (
+    from etl_tj_project_spark.harness_dedup import (
         shared_family_manifest,
         shared_residual_pairs,
     )
@@ -273,7 +273,7 @@ def test_shared_artifacts_are_snapshot_tables(spark, tmp_path):
     import etl_tj_project_spark.harness_r12 as hr12
     from etl_tj_project_spark import manifest as mf
     from etl_tj_project_spark import reuse
-    from etl_tj_project_spark.harness_r12 import (
+    from etl_tj_project_spark.harness_dedup import (
         shared_family_manifest,
         shared_residual_pairs,
     )

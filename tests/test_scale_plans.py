@@ -1087,7 +1087,7 @@ def test_keyset_boundary_guard_exact_semantics(spark):
     import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
-    from etl_tj_project_spark.harness_analytics import _keyset_boundary
+    from etl_tj_project_spark.harness_relational import _keyset_boundary
 
     keys = ["k1", "k2"]
 

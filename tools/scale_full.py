@@ -89,7 +89,7 @@ def main() -> None:
         # consumer at each scale dir pays the artifact compute. Flag
         # each timing cold (paid a miss) / warm (FileScan only) so the
         # SCALE.md decomposition can condition on who paid.
-        from etl_tj_project_spark import harness_r12 as _hr12
+        from etl_tj_project_spark import reuse
 
         artifact_flags: dict[str, str] = {}
 
@@ -98,12 +98,12 @@ def main() -> None:
             contention bracket; returns (sec, post_probe)."""
             nonlocal run_anchor, contended
             best = float("inf")
-            ev0 = len(_hr12.ARTIFACT_EVENTS)
+            ev0 = len(reuse.ARTIFACT_EVENTS)
             for _ in range(2):
                 t0 = time.perf_counter()
                 force(harness.REGISTRY[n].spark(spark, d))
                 best = min(best, time.perf_counter() - t0)
-            events = _hr12.ARTIFACT_EVENTS[ev0:]
+            events = reuse.ARTIFACT_EVENTS[ev0:]
             if events:
                 artifact_flags[f"{n}@{d}"] = (
                     "cold"
